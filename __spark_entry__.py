@@ -7480,10 +7480,7 @@ def q_fst_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fstd2pandas_spark.sources import (
         detect_rewrite, register, write_record_table)
 
-    try:
-        register(spark)
-    except Exception:
-        pass  # already registered in this session
+    register(spark)
     wdf = _writable_records(spark, sf_dir)
     out_dir = os.path.join(
         _TMP_ROOT, f"write_roundtrip_{os.path.basename(os.path.normpath(sf_dir))}")
@@ -7602,10 +7599,7 @@ def q_fst_xdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fstd2pandas_spark.sources import register, write_record_table
     from fstd2pandas_spark.sources.xdf_format import maybe_xdf
 
-    try:
-        register(spark)
-    except Exception:
-        pass  # already registered in this session
+    register(spark)
     # mixed packings cycling the whole codec family (turbo_codec.py):
     # transparent IEEE (5), compressed quantized (134/129), legacy packed
     # (1), compressed IEEE (133), plus unsigned/signed sub-word ints

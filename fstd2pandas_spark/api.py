@@ -58,10 +58,7 @@ class StandardFileReader:
         """The record table as a (lazy, distributed) Spark DataFrame."""
         from fstd2pandas_spark.sources import register
 
-        try:
-            register(self._spark)
-        except Exception:
-            pass  # already registered in this session
+        register(self._spark)
         reader = self._spark.read.format("fstrec")
         if not self.with_data:
             reader = reader.option("with_data", "false")
@@ -118,10 +115,7 @@ class StandardFileWriter:
     def to_fst(self) -> None:
         from fstd2pandas_spark.sources import register, write_record_table
 
-        try:
-            register(self.df.sparkSession)
-        except Exception:
-            pass  # already registered in this session
+        register(self.df.sparkSession)
         write_record_table(self.df, self.path, mode=self.mode,
                            overwrite=self.overwrite,
                            partition_by=self.partition_by,

@@ -1036,7 +1036,7 @@ def get_data(path: str, key: int, cache=None):
                     continue
         raise KeyError(f"key {key} not found under {path}")
     # record keys are 1-based directory positions (the data source's
-    # convention, fst_datasource.py:157)
+    # convention, fst_datasource.FstRecReader.read)
     if FR.maybe_fstrec(path):
         headers = FR.read_directory(path)
         if not 1 <= int(key) <= len(headers):

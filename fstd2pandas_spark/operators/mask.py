@@ -58,44 +58,30 @@ def _split(df: DataFrame, mask_typvar: str):
     return meta, masked, not_masked
 
 
-def _group_size_guard(masked: DataFrame, mask_typvar: str,
-                      op: str) -> DataFrame:
-    """Attach per-pairing-group counts ``_n`` (rows) and ``_nm`` (mask
-    rows), guarded LOUDLY: the reference RAISES on malformed groups
-    (apply_mask.py:63 'There should only be 2 rows per group!',
-    recover_mask.py:66 likewise for 1) where a bare inner join silently
-    DROPPED an unpaired variable and silently FANNED OUT a duplicated
-    mask — data loss/duplication reading as success. The window rides
-    the exact key the pairing join shuffles on, so Catalyst plans one
-    exchange for both. Guards live in the count columns themselves so
-    any branch filter evaluates them (callers filter on ``_n``)."""
+def _group_size_guard(masked: DataFrame) -> DataFrame:
+    """Attach the per-pairing-group row count ``_n``, guarded LOUDLY:
+    the reference RAISES on malformed groups (recover_mask.py:66) where
+    a bare inner join silently DROPPED an unpaired variable and
+    silently FANNED OUT a duplicated mask — data loss/duplication
+    reading as success. The window rides the exact key the pairing
+    join shuffles on, so Catalyst plans one exchange for both. The
+    guard lives in the count column itself so any branch filter
+    evaluates it (callers filter on ``_n``)."""
     w = Window.partitionBy(*MASK_GROUP_COLS)
     key_str = F.concat_ws(
         "/", *[F.coalesce(F.col(c).cast("string"), F.lit("NULL"))
                for c in ("nomvar", "etiket", "ip1", "ip2", "ip3")])
     n = F.count("*").over(w)
-    nm = F.sum((F.col("typvar") == mask_typvar).cast("int")).over(w)
-    if op == "apply":
-        bad = (n != 2) | (nm != 1)
-        msg = F.concat(
-            F.lit("apply_mask: pairing group "), key_str,
-            F.lit(" has "), n.cast("string"), F.lit(" rows ("),
-            nm.cast("string"),
-            F.lit(f" with mask typvar {mask_typvar!r}) — there should "
-                  "be exactly 2 rows per group, 1 of them the mask "
-                  "(apply_mask.py:63); run unpaired_mask_groups to "
-                  "list every offender"))
-    else:
-        bad = n > 2
-        msg = F.concat(
-            F.lit("recover_mask: pairing group "), key_str,
-            F.lit(" has "), n.cast("string"),
-            F.lit(" rows — at most 2 (an already-recovered var+mask "
-                  "pair passes through; recover_mask.py:66); run "
-                  "unpaired_mask_groups to list every offender"))
+    bad = n > 2
+    msg = F.concat(
+        F.lit("recover_mask: pairing group "), key_str,
+        F.lit(" has "), n.cast("string"),
+        F.lit(" rows — at most 2 (an already-recovered var+mask "
+              "pair passes through; recover_mask.py:66); run "
+              "unpaired_mask_groups to list every offender"))
     n_guarded = F.when(~bad, n).otherwise(
         F.raise_error(msg).cast("long"))
-    return masked.withColumn("_n", n_guarded).withColumn("_nm", nm)
+    return masked.withColumn("_n", n_guarded)
 
 
 def apply_mask(df: DataFrame, mask_typvar: str = "@@",
@@ -120,9 +106,8 @@ def apply_mask(df: DataFrame, mask_typvar: str = "@@",
     key_str = F.concat_ws(
         "/", *[F.coalesce(F.col(c).cast("string"), F.lit("NULL"))
                for c in ("nomvar", "etiket", "ip1", "ip2", "ip3")])
-    # same message as _group_size_guard's "apply" branch (reference
-    # apply_mask.py:63) — a 3-row group / duplicated mask RAISES instead
-    # of silently dropping / fanning out
+    # the reference's apply_mask.py:63 check — a 3-row group /
+    # duplicated mask RAISES instead of silently dropping / fanning out
     msg = F.concat(
         F.lit("apply_mask: pairing group "), key_str,
         F.lit(" has "), n.cast("string"), F.lit(" rows ("),
@@ -181,7 +166,7 @@ def recover_mask(df: DataFrame, mask_typvar: str = "@@",
         raise MaskError(f"keep_value can only be 0 or 1! provided {keep_value}")
 
     meta, masked, not_masked = _split(df, mask_typvar)
-    guarded = _group_size_guard(masked, mask_typvar, "recover")
+    guarded = _group_size_guard(masked)
     # Reference semantics (recover_mask.py:61-82), matched exactly:
     # a 2-row group is an ALREADY-recovered var+mask pair and passes
     # through UNCHANGED — the old code silently DROPPED the existing
@@ -190,8 +175,8 @@ def recover_mask(df: DataFrame, mask_typvar: str = "@@",
     # mask overwriting a real one); a 1-row group (whatever its
     # typvar — the reference synthesizes from a lone mask row too)
     # splits into data + synthesized mask; >2 raises in the guard.
-    passthrough = guarded.filter(F.col("_n") == 2).drop("_n", "_nm")
-    vars_ = guarded.filter(F.col("_n") == 1).drop("_n", "_nm")
+    passthrough = guarded.filter(F.col("_n") == 2).drop("_n")
+    vars_ = guarded.filter(F.col("_n") == 1).drop("_n")
     keep = float(keep_value)
 
     data_rows = vars_.withColumn(

@@ -109,21 +109,20 @@ def unit_convert(df: DataFrame, to_unit_name: str = "scalar",
     converted_d = F.transform(
         F.col("d"), lambda x: (x.cast("double") * scale + offset).cast("float")
     )
-    out = (
-        out.withColumn("d", F.when(convertible, converted_d).otherwise(F.col("d")))
-        .withColumn("unit", F.when(convertible, F.col("_to_name")).otherwise(F.col("unit")))
-        .withColumn(
-            "typvar",
-            F.when(convertible & (F.length("typvar") < 2),
-                   F.concat(F.col("typvar"), F.lit("U"))).otherwise(F.col("typvar")),
-        )
-    )
+    # one withColumns call: every expression reads the INPUT columns, so
+    # ``convertible`` is evaluated against the source unit, never the
+    # rewritten one
+    updates = {
+        "d": F.when(convertible, converted_d).otherwise(F.col("d")),
+        "unit": F.when(convertible, F.col("_to_name")).otherwise(F.col("unit")),
+        "typvar": F.when(convertible & (F.length("typvar") < 2),
+                         F.concat(F.col("typvar"), F.lit("U")))
+        .otherwise(F.col("typvar")),
+    }
     if "unit_converted" in df.columns:
-        out = out.withColumn(
-            "unit_converted",
-            F.when(convertible, F.lit(True)).otherwise(F.col("unit_converted")),
-        )
-    return out.select(*df.columns)
+        updates["unit_converted"] = F.when(convertible, F.lit(True)) \
+            .otherwise(F.col("unit_converted"))
+    return out.withColumns(updates).select(*df.columns)
 
 
 def family_mismatch_rows(df: DataFrame, to_unit_name: str) -> DataFrame:

@@ -3,7 +3,7 @@
 
 Usage::
 
-    spark.dataSource.register(FstRecDataSource)
+    register(spark)
     df = spark.read.format("fstrec").load("/path/to/dir_or_glob")
     df.write.format("fstrec").mode("overwrite").save("/out/dir")
 
@@ -14,14 +14,19 @@ Scale behavior:
   ``option("split_target_bytes")`` (default 128 MiB; 0 disables) are
   planned as multiple tasks over contiguous directory-index ranges, so
   read parallelism is never capped by the file count — a single
-  multi-GB container fans out instead of pinning one core;
+  multi-GB container fans out instead of pinning one core. Batch and
+  streaming scans share the one planner (``_plan_partitions``);
 - **filter pushdown** (``pushFilters``): equality / null-safe equality /
   range / In / IsNull / IsNotNull / NOT / startswith / endswith /
   contains predicates on metadata columns are evaluated against the
   header directory BEFORE any payload bytes are read — the engine-side
   version of the reference's query-before-data-load (O1,
   std_io.py:44-49). ``etiket LIKE 'R1%'``-class queries (the idiomatic
-  run-prefix selection) skip non-matching records' payloads entirely;
+  run-prefix selection) skip non-matching records' payloads entirely.
+  Every pushed filter runs through ``pyarrow.compute`` on the very
+  Arrow columns the scan emits (trimmed strings, ints, ``grid``,
+  ``key``), so it keeps exactly the rows Spark's own filter would keep
+  on the output;
 - **lazy field data**: with ``option("with_data", "false")`` the reader
   never touches payload extents (column-pruning fast path, O2). Spark's
   Python DataSource API has no projection pushdown hook yet, so the
@@ -39,13 +44,15 @@ Filtered queries themselves are always correct; fresh loads are always
 correct. Safe patterns: re-load per logical query (this package's api
 facade and every __spark_entry__ gate do), or pass
 ``option("pushdown", "false")`` on a load that must be shared across
-several actions (filters then run engine-side; results identical, the
-header-skip fast path is lost). The strict-xfail sentinel test flips
-the day a Spark upgrade fixes this, so the warning can be retired.
+several actions: the reader then hands every filter back to Spark
+(results identical, the header-skip fast path is lost). The
+strict-xfail sentinel test flips the day a Spark upgrade fixes this,
+so the warning can be retired.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -80,6 +87,13 @@ SCHEMA_DDL = (
     "ig4 int, datev bigint, grid string, d array<float>, "
     "path string, key bigint"
 )
+_NAMES = ("nomvar", "typvar", "etiket", "ni", "nj", "nk", "dateo", "ip1",
+          "ip2", "ip3", "deet", "npas", "datyp", "nbits", "grtyp", "ig1",
+          "ig2", "ig3", "ig4", "datev", "grid", "d", "path", "key")
+_STR_COLS = ("nomvar", "typvar", "etiket", "grtyp")
+_INT32_COLS = ("ni", "nj", "nk", "ip1", "ip2", "ip3", "deet", "npas",
+               "datyp", "nbits", "ig1", "ig2", "ig3", "ig4")
+_INT64_COLS = ("dateo", "datev")
 
 
 @dataclass
@@ -109,6 +123,24 @@ def _list_container_files(path: str) -> "list[str]":
     for p in list_fstrec_files(path) + list_xdf_files(path):
         seen.setdefault(p, None)
     return sorted(seen)
+
+
+def _plan_partitions(files: "list[str]",
+                     split_target: int) -> "list[_FilePartition]":
+    """One task per file; a file above ``split_target`` bytes (0
+    disables) becomes ceil(size / split_target) tasks over contiguous
+    directory-index ranges."""
+    parts = []
+    for p in files:
+        n_splits = 1
+        if split_target > 0:
+            try:
+                size = os.path.getsize(p)
+            except OSError:
+                size = 0
+            n_splits = max(1, -(-size // split_target))
+        parts.extend(_FilePartition(p, s, n_splits) for s in range(n_splits))
+    return parts
 
 
 def _container_columns(path: str):
@@ -143,8 +175,13 @@ def _container_columns(path: str):
 #: reference's grid-association idiom)
 _META_NOMVARS = ("^>", ">>", "^^", "!!", "!!SF")
 #: ascii whitespace str.rstrip() strips — the boxed path's decode()
-#: semantics, reproduced for the Arrow fast path
+#: semantics, reproduced in the Arrow scan
 _RSTRIP_CHARS = " \t\r\n\x0b\x0c\x1c\x1d\x1e\x1f\x85"
+#: pushed comparison -> pyarrow.compute function; header columns are
+#: never NULL, so null-safe equality with a non-NULL value is equality
+_COMPARE = {EqualTo: "equal", EqualNullSafe: "equal",
+            GreaterThan: "greater", GreaterThanOrEqual: "greater_equal",
+            LessThan: "less", LessThanOrEqual: "less_equal"}
 
 
 def _strings_to_arrow(arr, trim: str):
@@ -165,209 +202,68 @@ def _strings_to_arrow(arr, trim: str):
     return pa.array(arr)
 
 
-def _grid_arrow(cols, trim: str):
-    """Vectorized grid id column: f"{ip1}{ip2}" for axis/descriptor
-    records, "None" for HY, else f"{ig1}{ig2}" — int->string casts and
-    joins in Arrow. Membership tests run on the raw padded bytes
-    (value padded to field width), which equals the stripped-string
-    test unless a both-sides-stripping (XDF) column carries LEADING
-    whitespace — a cheap first-byte sweep detects that and falls back
-    to exact decoded comparison."""
-    import numpy as np
+def _grid_arrow(meta: dict):
+    """Vectorized grid id column from the emitted Arrow columns:
+    f"{ip1}{ip2}" for axis/descriptor records, "None" for HY, else
+    f"{ig1}{ig2}"."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    nv = cols["nomvar"]
-    if nv.dtype.kind == "S":
-        w = nv.dtype.itemsize
-        decoded = None
-        if trim == "both" and len(nv):
-            firsts = np.frombuffer(
-                np.ascontiguousarray(nv), dtype="uint8").reshape(-1, w)[:, 0]
-            if (firsts == 0x20).any():
-                decoded = np.char.strip(nv.astype("U"))
-        if decoded is not None:
-            meta = np.isin(decoded, np.array(_META_NOMVARS))
-            hy = decoded == "HY"
-        else:
-            metas = np.array([s.encode().ljust(w, b" ")
-                              for s in _META_NOMVARS], dtype=nv.dtype)
-            meta = np.isin(np.ascontiguousarray(nv), metas)
-            hy = nv == b"HY".ljust(w, b" ")
-    else:
-        meta = np.isin(nv, np.array(_META_NOMVARS))
-        hy = nv == "HY"
-
     def _join(a, b):
         return pc.binary_join_element_wise(
-            pc.cast(pa.array(a), pa.string()),
-            pc.cast(pa.array(b), pa.string()), "")
+            pc.cast(meta[a], pa.string()), pc.cast(meta[b], pa.string()), "")
 
+    nomvar = meta["nomvar"]
     return pc.if_else(
-        pa.array(meta), _join(cols["ip1"], cols["ip2"]),
-        pc.if_else(pa.array(hy), pa.scalar("None"),
-                   _join(cols["ig1"], cols["ig2"])))
+        pc.is_in(nomvar, value_set=pa.array(_META_NOMVARS)),
+        _join("ip1", "ip2"),
+        pc.if_else(pc.equal(nomvar, "HY"), pa.scalar("None"),
+                   _join("ig1", "ig2")))
 
 
-def _filter_mask(flt: Filter, cols, grid_pa, path: str, n: int,
-                 dec_cache: dict, trim: str):
-    """One pushed filter -> boolean numpy mask (the vectorized twin of
-    the old per-record ``_matches``). String columns stored as padded
-    bytes compare against the value PADDED TO FIELD WIDTH with spaces
-    (identical ordering to stripped-string comparison for values
-    without trailing whitespace — space sorts below every printable);
-    values that do not round-trip through padding (trailing
-    whitespace) fall back to a decoded-column comparison with exact
-    Python semantics."""
-    import numpy as np
+def _filter_mask(flt: Filter, meta: dict, path: str):
+    """One pushed filter -> Arrow boolean mask over the emitted columns
+    (a boolean scalar for ``path``, which is constant per file)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     if isinstance(flt, Not):
-        # header columns are never NULL, so boolean complement IS the
-        # SQL NOT of the child predicate here
-        return ~_filter_mask(flt.child, cols, grid_pa, path, n,
-                             dec_cache, trim)
+        return pc.invert(_filter_mask(flt.child, meta, path))
     col = flt.attribute[0]
-    if isinstance(flt, IsNotNull):
-        return np.ones(n, dtype=bool)   # header columns are never null
+    arr = pa.array([path]) if col == "path" else meta[col]
     if isinstance(flt, IsNull):
-        return np.zeros(n, dtype=bool)
-    if isinstance(flt, EqualNullSafe):
-        flt = EqualTo(flt.attribute, flt.value)   # no NULLs: same test
-    if col == "path":
-        v = flt.value
-        ok = (path == v if isinstance(flt, EqualTo)
-              else path in flt.value if isinstance(flt, In)
-              else path.startswith(v) if isinstance(flt, StringStartsWith)
-              else path.endswith(v) if isinstance(flt, StringEndsWith)
-              else v in path if isinstance(flt, StringContains)
-              else path > v if isinstance(flt, GreaterThan)
-              else path >= v if isinstance(flt, GreaterThanOrEqual)
-              else path < v if isinstance(flt, LessThan)
-              else path <= v)
-        return np.full(n, bool(ok))
-    if col == "grid":
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        if isinstance(flt, EqualTo):
-            m = pc.equal(grid_pa, str(flt.value))
-        elif isinstance(flt, In):
-            m = pc.is_in(grid_pa,
-                         value_set=pa.array([str(v) for v in flt.value]))
-        elif isinstance(flt, StringStartsWith):
-            m = pc.starts_with(grid_pa, pattern=str(flt.value))
-        elif isinstance(flt, StringEndsWith):
-            m = pc.ends_with(grid_pa, pattern=str(flt.value))
-        elif isinstance(flt, StringContains):
-            m = pc.match_substring(grid_pa, pattern=str(flt.value))
-        elif isinstance(flt, GreaterThan):
-            m = pc.greater(grid_pa, str(flt.value))
-        elif isinstance(flt, GreaterThanOrEqual):
-            m = pc.greater_equal(grid_pa, str(flt.value))
-        elif isinstance(flt, LessThan):
-            m = pc.less(grid_pa, str(flt.value))
-        else:
-            m = pc.less_equal(grid_pa, str(flt.value))
-        return m.to_numpy(zero_copy_only=False)
-
-    arr = cols[col]
-    if arr.dtype.kind == "S":
-        width = arr.dtype.itemsize
-
-        def enc(v):
-            s = str(v)
-            canon = s.strip() if trim == "both" else s.rstrip()
-            if s != canon:
-                return None          # not representable padded
-            b = s.encode("ascii", "replace")
-            return b.ljust(width, b" ") if len(b) <= width else b
-
-        def dec():
-            if col not in dec_cache:
-                strip = np.char.strip if trim == "both" else np.char.rstrip
-                dec_cache[col] = strip(arr.astype("U"))
-            return dec_cache[col]
-
-        def clean_col():
-            # the padded-bytes compare equals the stripped compare
-            # unless a both-sides-stripping (XDF) column carries
-            # LEADING whitespace; one cached first-byte sweep decides
-            if trim != "both":
-                return True
-            key = ("__noleading__", col)
-            if key not in dec_cache:
-                firsts = (np.frombuffer(np.ascontiguousarray(arr),
-                                        dtype="uint8")
-                          .reshape(-1, width)[:, 0]) if n else \
-                    np.zeros(0, dtype="uint8")
-                dec_cache[key] = not bool((firsts == 0x20).any())
-            return dec_cache[key]
-
-        if isinstance(flt, In):
-            pbs = [enc(v) for v in flt.value]
-            if any(p is None for p in pbs) or not clean_col():
-                target, vals = dec(), [str(v) for v in flt.value]
-            else:
-                target, vals = arr, pbs
-            m = np.zeros(n, dtype=bool)
-            for v in vals:
-                m |= target == v
-            return m
-        if isinstance(flt, StringStartsWith):
-            v = str(flt.value)
-            # prefix test on the STRIPPED value == raw-bytes prefix
-            # compare, unless the value itself ends in whitespace
-            # (those chars could be padding) or the column carries
-            # leading whitespace under both-sides stripping
-            if v == v.rstrip() and clean_col():
-                vb = v.encode("ascii", "replace")
-                if len(vb) > width:
-                    return np.zeros(n, dtype=bool)
-                mat = (np.frombuffer(np.ascontiguousarray(arr),
-                                     dtype="uint8").reshape(-1, width)
-                       if n else np.zeros((0, width), dtype="uint8"))
-                return (mat[:, :len(vb)]
-                        == np.frombuffer(vb, dtype="uint8")).all(axis=1)
-            return np.char.startswith(dec(), v)
-        if isinstance(flt, StringEndsWith):
-            return np.char.endswith(dec(), str(flt.value))
-        if isinstance(flt, StringContains):
-            return np.char.find(dec(), str(flt.value)) >= 0
-        pb = enc(flt.value)
-        target, v = ((arr, pb) if pb is not None and clean_col()
-                     else (dec(), str(flt.value)))
-        if isinstance(flt, EqualTo):
-            return target == v
-        if isinstance(flt, GreaterThan):
-            return target > v
-        if isinstance(flt, GreaterThanOrEqual):
-            return target >= v
-        if isinstance(flt, LessThan):
-            return target < v
-        return target <= v
-
-    # int columns (incl. the virtual 1-based 'key') and xdf unicode
-    if isinstance(flt, EqualTo):
-        return arr == flt.value
-    if isinstance(flt, In):
-        m = np.zeros(n, dtype=bool)
-        for v in flt.value:
-            m |= arr == v
-        return m
-    if isinstance(flt, GreaterThan):
-        return arr > flt.value
-    if isinstance(flt, GreaterThanOrEqual):
-        return arr >= flt.value
-    if isinstance(flt, LessThan):
-        return arr < flt.value
-    return arr <= flt.value
+        m = pc.is_null(arr)
+    elif isinstance(flt, IsNotNull):
+        m = pc.is_valid(arr)
+    elif isinstance(flt, In):
+        m = pc.is_in(arr, value_set=pa.array(list(flt.value)))
+    elif isinstance(flt, StringStartsWith):
+        m = pc.starts_with(arr, pattern=flt.value)
+    elif isinstance(flt, StringEndsWith):
+        m = pc.ends_with(arr, pattern=flt.value)
+    elif isinstance(flt, StringContains):
+        m = pc.match_substring(arr, pattern=flt.value)
+    else:
+        m = getattr(pc, _COMPARE[type(flt)])(arr, flt.value)
+    return m[0] if col == "path" else m
 
 
-class _FstRecReaderBase(DataSourceReader):
-    """Scan implementation WITHOUT ``pushFilters`` — Spark refuses to
-    initialize any Python reader that overrides ``pushFilters`` when
-    ``spark.sql.python.filterPushdown.enabled`` is false, so this base is
-    the fallback registered under that conf (filters then run engine-side;
-    results identical, header-skip fast path lost)."""
+class FstRecReader(DataSourceReader):
+    """Batch scan with header-directory filter pushdown (F1);
+    ``option("pushdown", "false")`` hands every filter back to Spark."""
+
+    #: columns the header directory can actually evaluate — filters on
+    #: anything else (notably the payload column 'd') MUST be yielded
+    #: back, or Spark drops them assuming the source applied them
+    PUSHABLE = frozenset([
+        "nomvar", "typvar", "etiket", "ni", "nj", "nk", "dateo", "ip1",
+        "ip2", "ip3", "deet", "npas", "datyp", "nbits", "grtyp", "ig1",
+        "ig2", "ig3", "ig4", "datev", "grid", "path", "key",
+    ])
+    #: the string-typed subset: String* filters are only meaningful
+    #: (and only generated by Spark) for these
+    STR_PUSHABLE = frozenset(
+        ["nomvar", "typvar", "etiket", "grtyp", "grid", "path"])
 
     def __init__(self, options: dict):
         self.path = options.get("path")
@@ -384,30 +280,44 @@ class _FstRecReaderBase(DataSourceReader):
         #: sweet spot and halves the 100-TB task count vs 64 MiB.
         self.split_target = int(
             options.get("split_target_bytes", str(128 * 1024 * 1024)))
+        #: per-load escape from the upstream plan-sharing bug (module
+        #: docstring): "false" yields every filter back to Spark
+        self.pushdown = str(options.get("pushdown", "true")).lower() != "false"
         self.filters: list[Filter] = []
 
-    def partitions(self):
-        import os as _os
+    def _supported(self, f: Filter) -> bool:
+        if isinstance(f, Not):
+            # header columns are never NULL, so NOT keeps its SQL meaning
+            return self._supported(f.child)
+        if not (len(f.attribute) == 1 and f.attribute[0] in self.PUSHABLE):
+            return False
+        if isinstance(f, (StringStartsWith, StringEndsWith,
+                          StringContains)):
+            return f.attribute[0] in self.STR_PUSHABLE
+        return isinstance(
+            f, (EqualTo, EqualNullSafe, In, GreaterThan,
+                GreaterThanOrEqual, LessThan, LessThanOrEqual,
+                IsNotNull, IsNull))
 
+    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
+        """Accept every supported metadata filter; Spark re-applies the
+        rest (we keep unsupported ones by yielding them back)."""
+        for f in filters:
+            if self.pushdown and self._supported(f):
+                self.filters.append(f)
+            else:
+                yield f
+
+    def partitions(self):
         files = _list_container_files(self.path)
         if not files:
             raise FileNotFoundError(f"fstrec: no files at {self.path}")
-        parts = []
-        for p in files:
-            n_splits = 1
-            if self.split_target > 0:
-                try:
-                    size = _os.path.getsize(p)
-                except OSError:
-                    size = 0
-                n_splits = max(1, -(-size // self.split_target))
-            parts.extend(_FilePartition(p, s, n_splits)
-                         for s in range(n_splits))
-        return parts
+        return _plan_partitions(files, self.split_target)
 
     def read(self, partition: _FilePartition):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         path = partition.path
         read_columns, payload_at, verify_cols, trim = \
@@ -421,38 +331,37 @@ class _FstRecReaderBase(DataSourceReader):
             lo = (total * partition.split) // partition.n_splits
             hi = (total * (partition.split + 1)) // partition.n_splits
         view = {k: v[lo:hi] for k, v in cols.items()}
-        view["key"] = np.arange(lo + 1, hi + 1, dtype="int64")
         n = hi - lo
         if not n:
             return
-        grid_pa = _grid_arrow(view, trim)
+
+        # the emitted metadata columns, converted once for the whole
+        # range (zero-copy for the int columns already at width; C-speed
+        # casts otherwise); pushed filters evaluate on exactly these and
+        # the per-chunk emission below slices them
+        meta = {c: _strings_to_arrow(view[c], trim) for c in _STR_COLS}
+        meta.update((c, pa.array(np.ascontiguousarray(view[c], dtype="<i4")))
+                    for c in _INT32_COLS)
+        meta.update((c, pa.array(np.ascontiguousarray(view[c], dtype="<i8")))
+                    for c in _INT64_COLS)
+        meta["grid"] = _grid_arrow(meta)
+        meta["key"] = pa.array(np.arange(lo + 1, hi + 1, dtype="int64"))
         if self.filters:
-            mask = np.ones(n, dtype=bool)
-            dec_cache: dict = {}
+            mask = pa.scalar(True)
             for flt in self.filters:
-                mask &= _filter_mask(flt, view, grid_pa, path, n,
-                                     dec_cache, trim)
-            if not mask.all():
-                idx = np.nonzero(mask)[0]
-                view = {k: v[idx] for k, v in view.items()}
-                grid_pa = grid_pa.take(pa.array(idx, pa.int64()))
-                n = len(idx)
+                mask = pc.and_kleene(mask, _filter_mask(flt, meta, path))
+            if isinstance(mask, pa.Scalar):        # path-only filters
+                if not mask.as_py():
+                    return
+            else:
+                idx = np.flatnonzero(mask.to_numpy(zero_copy_only=False))
+                if len(idx) < n:
+                    take = pa.array(idx, pa.int64())
+                    meta = {k: v.take(take) for k, v in meta.items()}
+                    view = {k: v[idx] for k, v in view.items()}
+                    n = len(idx)
         if not n:
             return
-
-        int32_cols = ("ni", "nj", "nk", "ip1", "ip2", "ip3", "deet",
-                      "npas", "datyp", "nbits", "ig1", "ig2", "ig3", "ig4")
-        int64_cols = ("dateo", "datev")
-        str_cols = ("nomvar", "typvar", "etiket", "grtyp")
-        # whole-selection Arrow conversion once (zero-copy for the
-        # int columns already at width; C-speed casts otherwise);
-        # per-chunk emission below slices these
-        np_i32 = {c: np.ascontiguousarray(view[c], dtype="<i4")
-                  for c in int32_cols}
-        np_i64 = {c: np.ascontiguousarray(view[c], dtype="<i8")
-                  for c in int64_cols}
-        pa_str = {c: _strings_to_arrow(view[c], trim)
-                  for c in str_cols}
 
         # chunk by ROWS and by ELEMENT COUNT: Arrow list offsets are
         # int32, so one batch must stay far below 2^31 total floats
@@ -478,24 +387,12 @@ class _FstRecReaderBase(DataSourceReader):
             cur_elems += sz
         bounds.append(n)
 
-        names = ("nomvar", "typvar", "etiket", "ni", "nj", "nk",
-                 "dateo", "ip1", "ip2", "ip3", "deet", "npas",
-                 "datyp", "nbits", "grtyp", "ig1", "ig2", "ig3",
-                 "ig4", "datev", "grid", "d", "path", "key")
         f = open(path, "rb") if self.with_data else None
         try:
             for a, b in zip(bounds[:-1], bounds[1:]):
                 m = b - a
-                arrays: dict[str, pa.Array] = {}
-                for c in str_cols:
-                    arrays[c] = pa_str[c].slice(a, m)
-                for c in int32_cols:
-                    arrays[c] = pa.array(np_i32[c][a:b])
-                for c in int64_cols:
-                    arrays[c] = pa.array(np_i64[c][a:b])
-                arrays["grid"] = grid_pa.slice(a, m)
+                arrays = {c: v.slice(a, m) for c, v in meta.items()}
                 arrays["path"] = pa.array([path] * m, pa.string())
-                arrays["key"] = pa.array(view["key"][a:b])
                 if f is not None:
                     if verify_cols is not None:
                         # one vectorized key-block verification per
@@ -520,58 +417,15 @@ class _FstRecReaderBase(DataSourceReader):
                 else:
                     arrays["d"] = pa.nulls(m, pa.list_(pa.float32()))
                 yield pa.RecordBatch.from_arrays(
-                    [arrays[c] for c in names], names=list(names))
+                    [arrays[c] for c in _NAMES], names=list(_NAMES))
         finally:
             if f is not None:
                 f.close()
 
 
-class FstRecReader(_FstRecReaderBase):
-    """Default reader: header-directory filter pushdown (F1)."""
-
-    #: columns the header directory can actually evaluate — filters on
-    #: anything else (notably the payload column 'd') MUST be yielded
-    #: back, or Spark drops them assuming the source applied them
-    PUSHABLE = frozenset([
-        "nomvar", "typvar", "etiket", "ni", "nj", "nk", "dateo", "ip1",
-        "ip2", "ip3", "deet", "npas", "datyp", "nbits", "grtyp", "ig1",
-        "ig2", "ig3", "ig4", "datev", "grid", "path", "key",
-    ])
-    #: the string-typed subset: String* filters are only meaningful
-    #: (and only generated by Spark) for these
-    STR_PUSHABLE = frozenset(
-        ["nomvar", "typvar", "etiket", "grtyp", "grid", "path"])
-
-    def _supported(self, f: Filter) -> bool:
-        if isinstance(f, Not):
-            # header columns are never NULL, so ~mask IS SQL NOT here
-            # (no third truth value to lose)
-            return self._supported(f.child)
-        if not (len(f.attribute) == 1 and f.attribute[0] in self.PUSHABLE):
-            return False
-        if isinstance(f, (StringStartsWith, StringEndsWith,
-                          StringContains)):
-            return f.attribute[0] in self.STR_PUSHABLE
-        return isinstance(
-            f, (EqualTo, EqualNullSafe, In, GreaterThan,
-                GreaterThanOrEqual, LessThan, LessThanOrEqual,
-                IsNotNull, IsNull))
-
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        """Accept every supported metadata filter; Spark re-applies the
-        rest (we keep unsupported ones by yielding them back)."""
-        for f in filters:
-            if self._supported(f):
-                self.filters.append(f)
-            else:
-                yield f
-
-
 def _stat_ns(path: str) -> int:
     """mtime_ns of one file (separable for tests/alternate stores)."""
-    import os as _os
-
-    return _os.stat(path).st_mtime_ns
+    return os.stat(path).st_mtime_ns
 
 
 class FstRecStreamReader(DataSourceStreamReader):
@@ -602,14 +456,9 @@ class FstRecStreamReader(DataSourceStreamReader):
     paths, not bytes)."""
 
     def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("fstrec: path required")
-        self.with_data = str(options.get("with_data", "true")).lower() != "false"
-        self.batch_rows = int(options.get("batch_rows", "2048"))
-        # same tuning contract as the batch reader (0 disables splits)
-        self.split_target = int(
-            options.get("split_target_bytes", str(128 * 1024 * 1024)))
+        #: the batch reader's option parsing, planning and scan (it
+        #: never receives pushed filters here)
+        self._scan = FstRecReader(options)
         self.grace_ns = int(
             float(options.get("late_file_grace_s", "300")) * 1_000_000_000)
         #: monotonic floor within this run: a transient empty/short
@@ -625,7 +474,7 @@ class FstRecStreamReader(DataSourceStreamReader):
 
     def _current_files(self) -> list[str]:
         try:
-            return _list_container_files(self.path)
+            return _list_container_files(self._scan.path)
         except FileNotFoundError:
             return []
 
@@ -679,35 +528,17 @@ class FstRecStreamReader(DataSourceStreamReader):
         return off
 
     def partitions(self, start: dict, end: dict):
-        import os as _os
-
         new = sorted(
             p for m, p in self._listing()
             if self._consumed(end, m, p) and not self._consumed(start, m, p)
         )
         # same intra-file split as the batch reader: a huge
         # forecast-cycle drop must not pin one core for the whole
-        # micro-batch (split_target_bytes option honored, 0 disables)
-        parts = []
-        for p in new:
-            n_splits = 1
-            if self.split_target > 0:
-                try:
-                    size = _os.path.getsize(p)
-                except OSError:
-                    size = 0
-                n_splits = max(1, -(-size // self.split_target))
-            parts.extend(_FilePartition(p, s, n_splits)
-                         for s in range(n_splits))
-        return parts
+        # micro-batch
+        return _plan_partitions(new, self._scan.split_target)
 
     def read(self, partition: _FilePartition):
-        reader = FstRecReader({
-            "path": partition.path,
-            "with_data": "true" if self.with_data else "false",
-            "batch_rows": str(self.batch_rows),
-        })
-        yield from reader.read(partition)
+        return self._scan.read(partition)
 
     def commit(self, end: dict) -> None:
         return None
@@ -722,8 +553,6 @@ class _WriteResult(WriterCommitMessage):
 
 class FstRecWriter(DataSourceWriter):
     def __init__(self, options: dict, overwrite: bool):
-        import os
-
         self.path = options.get("path")
         if not self.path:
             raise ValueError("fstrec: path required")
@@ -743,7 +572,6 @@ class FstRecWriter(DataSourceWriter):
     def write(self, rows) -> _WriteResult:
         """One output file per task (the reference's 128-row block writes,
         std_writer.py:139-141, generalize to partition-sized blocks)."""
-        import os
         import uuid
 
         from pyspark import TaskContext
@@ -771,7 +599,6 @@ class FstRecWriter(DataSourceWriter):
                             tmp_path=tmp, n=n)
 
     def commit(self, messages) -> None:
-        import os
         import shutil
 
         # 1) publish: rename each committed task file into the output
@@ -798,13 +625,6 @@ class FstRecWriter(DataSourceWriter):
 class FstRecDataSource(DataSource):
     """format name: ``fstrec``."""
 
-    # register() flips this off when the session forbids Python-reader
-    # filter pushdown (spark.sql.python.filterPushdown.enabled=false and
-    # not runtime-settable): Spark refuses to even construct a reader
-    # that overrides pushFilters under that conf, so we fall back to the
-    # same scan without the pushdown hook.
-    pushdown = True
-
     @classmethod
     def name(cls) -> str:
         return "fstrec"
@@ -812,20 +632,8 @@ class FstRecDataSource(DataSource):
     def schema(self) -> str:
         return SCHEMA_DDL
 
-    def reader(self, schema: StructType) -> _FstRecReaderBase:
-        # option("pushdown", "false"): per-load escape from the
-        # upstream Spark 4.1 Python-DataSource plan-sharing bug (see
-        # the module docstring's "Known upstream issue"): with filter
-        # pushdown on, EXECUTING a fully-pushed filtered child query
-        # and then RE-EXECUTING its parent DataFrame returns the
-        # child's filtered rows. Re-loading per logical query (what
-        # this package's own facade and gates do) avoids it; loads
-        # that must be shared across several actions can turn the
-        # pushdown off here instead.
-        opt_on = str(self.options.get("pushdown", "true")).lower() != "false"
-        cls = (FstRecReader if FstRecDataSource.pushdown and opt_on
-               else _FstRecReaderBase)
-        return cls(self.options)
+    def reader(self, schema: StructType) -> FstRecReader:
+        return FstRecReader(self.options)
 
     def streamReader(self, schema: StructType) -> FstRecStreamReader:
         return FstRecStreamReader(self.options)
@@ -837,17 +645,11 @@ class FstRecDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Register the ``fstrec`` format.  Spark 4 refuses to initialize a
-    Python DataSource reader that defines ``pushFilters()`` when
-    ``spark.sql.python.filterPushdown.enabled`` is false, so make sure
-    it is on (runtime-settable); if the session has made it static and
-    off, degrade to the no-pushdown reader instead of failing the scan."""
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        FstRecDataSource.pushdown = True
-    except Exception:
-        enabled = str(
-            spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-        ).lower() == "true"
-        FstRecDataSource.pushdown = enabled
+    """Register the ``fstrec`` format, replacing any earlier
+    registration. Spark 4 refuses to initialize a Python DataSource
+    reader that defines ``pushFilters()`` while
+    ``spark.sql.python.filterPushdown.enabled`` is false, so this turns
+    the (runtime-settable) conf on; a session that turns it off again
+    fails the next scan loudly with DATA_SOURCE_PUSHDOWN_DISABLED."""
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(FstRecDataSource)

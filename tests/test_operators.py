@@ -245,6 +245,8 @@ def test_unit_convert_roundtrip(spark, records):
     k_rows = as_k.orderBy("key").collect()
     for o, k in zip(orig, k_rows):
         assert k.d[0] == pytest.approx(o.d[0] + 273.15, rel=1e-5)
+        # the 'U' (unit converted) typvar flag is set on converted rows
+        assert (o.typvar, k.typvar) == ("P", "PU")
     back = unit_convert(as_k.withColumn("unit", F.lit("kelvin")), "celsius")
     for o, b in zip(orig, back.orderBy("key").collect()):
         assert b.d[0] == pytest.approx(o.d[0], abs=1e-3)

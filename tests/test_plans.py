@@ -741,7 +741,10 @@ def test_compaction_never_changes_content(spark, tmp_path):
                                verify=True)
     assert sorted(stats["compacted"]) == [
         "day=0", "day=1", "day=__HIVE_DEFAULT_PARTITION__"]
-    assert stats["files_before"] == 72 and stats["files_after"] == 3
+    # round-robin fragmentation need not put rows of every day in all
+    # 24 tasks, so count the fragmented files the plan listed on disk
+    assert stats["files_before"] == sum(e["n_files"] for e in touched)
+    assert stats["files_after"] == 3
     plan1 = compaction_plan(spark, path, ["day"], 1 << 30)
     assert all(e["n_files"] == 1 for e in plan1), plan1
     assert fp() == before

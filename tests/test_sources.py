@@ -26,6 +26,22 @@ def fstrec_dir(registered, records, tmp_path_factory):
     return out
 
 
+def _assert_payloads_match(want_df, got_df, cols):
+    """Row-by-row payload equality: both sides sorted by (full
+    metadata tuple, d), so duplicate metadata rows that differ only in
+    ``d`` (the fixture's HU pair) each count, whatever the collect
+    order."""
+    def rows(df):
+        return sorted((tuple(r[c] for c in cols), list(r.d))
+                      for r in df.collect())
+
+    want, got = rows(want_df), rows(got_df)
+    assert len(want) == len(got)
+    for (wm, wd), (gm, gd) in zip(want, got):
+        assert wm == gm
+        assert gd == pytest.approx(wd, rel=1e-6)
+
+
 def test_fstrec_roundtrip(registered, records, fstrec_dir):
     back = registered.read.format("fstrec").load(fstrec_dir)
     assert back.count() == records.count()
@@ -34,12 +50,7 @@ def test_fstrec_roundtrip(registered, records, fstrec_dir):
     got = {tuple(r[c] for c in cols) for r in back.collect()}
     assert orig == got
     # payload fidelity (float32 exact)
-    key = ("nomvar", "typvar", "grid", "ip1", "ip2", "datev")
-    o = {tuple(r[c] for c in key): r.d for r in records.collect()}
-    g = {tuple(r[c] for c in key): r.d for r in back.collect()}
-    assert set(o) == set(g)
-    for k, d in o.items():
-        assert g[k] == pytest.approx(d, rel=1e-6)
+    _assert_payloads_match(records, back, cols)
 
 
 def test_fstrec_filter_pushdown_reads_correct_subset(registered, fstrec_dir):
@@ -469,12 +480,7 @@ def test_xdf_datasource_roundtrip_and_mixed_dir(registered, records,
     orig = {tuple(r[c] for c in cols) for r in wdf.collect()}
     got = {tuple(r[c] for c in cols) for r in back.collect()}
     assert orig == got
-    key = ("nomvar", "typvar", "grid", "ip1", "ip2", "datev")
-    o = {tuple(r[c] for c in key): r.d for r in wdf.collect()}
-    g = {tuple(r[c] for c in key): r.d for r in back.collect()}
-    assert set(o) == set(g)
-    for k, d in o.items():
-        assert g[k] == pytest.approx(d, rel=1e-6)
+    _assert_payloads_match(wdf, back, cols)
 
     # mixed directory: drop one .fstrec alongside; one load reads both
     extra = wdf.limit(3)
@@ -1409,6 +1415,52 @@ def test_fstrec_pushdown_option_escape(registered, records, tmp_path):
     assert fresh.count() == n
 
 
+def test_fstrec_reader_pushdown_option_and_path_filters(tmp_path):
+    """option('pushdown', 'false') hands every filter back to Spark
+    from the one reader class, and ``path`` filters are a per-file
+    scalar test that combines with the column masks."""
+    from pyspark.sql.datasource import EqualTo, In, Not, StringEndsWith
+
+    from fstd2pandas_spark.sources.fst_datasource import (
+        _FilePartition, FstRecReader)
+    from fstd2pandas_spark.sources.fstrec_format import write_fstrec
+
+    recs = [dict(
+        nomvar=["TT", "UU", "HY"][i % 3], typvar="P", etiket="E",
+        grtyp="Z", ni=1, nj=1, nk=1, dateo=442998800, ip1=i, ip2=0,
+        ip3=0, deet=300, npas=0, datyp=5, nbits=32, ig1=1, ig2=2, ig3=0,
+        ig4=0, datev=442998800, d=[float(i)]) for i in range(9)]
+    p = str(tmp_path / "n.fstrec")
+    write_fstrec(p, recs)
+
+    off = FstRecReader({"path": p, "pushdown": "false"})
+    fls = [EqualTo(("nomvar",), "TT"), In(("ip1",), (1, 2))]
+    assert list(off.pushFilters(fls)) == fls and not off.filters
+
+    def keys(*fls):
+        reader = FstRecReader({"path": p})
+        assert not list(reader.pushFilters(list(fls)))
+        return sorted(k for b in reader.read(_FilePartition(p))
+                      for k in b.column("key").to_pylist())
+
+    assert keys(EqualTo(("path",), p)) == list(range(1, 10))
+    assert keys(Not(StringEndsWith(("path",), ".fstrec"))) == []
+    assert keys(EqualTo(("path",), p), EqualTo(("nomvar",), "UU")) \
+        == [2, 5, 8]
+
+
+def test_fstrec_writer_abort_removes_tmp(tmp_path):
+    """A failed write job's abort() drops <path>/_tmp/ and its partial
+    task files, leaving the output directory as it was."""
+    from fstd2pandas_spark.sources.fst_datasource import FstRecWriter
+
+    out = tmp_path / "out"
+    (out / "_tmp").mkdir(parents=True)
+    (out / "_tmp" / "part-00000-deadbeef.fstrec").write_bytes(b"partial")
+    FstRecWriter({"path": str(out)}, overwrite=False).abort([])
+    assert not (out / "_tmp").exists() and out.is_dir()
+
+
 def test_fstrec_spill_write_byte_identical(tmp_path, monkeypatch):
     """Round 18 writer memory ceiling: the streaming consumption with a
     sidecar spill (forced here with a 64-byte threshold) produces a
@@ -1475,7 +1527,7 @@ def test_fat_record_arrow_batch_cap(tmp_path):
     import pyarrow as pa
 
     from fstd2pandas_spark.sources.fst_datasource import (
-        _FilePartition, _FstRecReaderBase)
+        _FilePartition, FstRecReader)
     from fstd2pandas_spark.sources.fstrec_format import write_fstrec
 
     CAP = 1024 * 1024
@@ -1493,7 +1545,7 @@ def test_fat_record_arrow_batch_cap(tmp_path):
     p = str(tmp_path / "fat.fstrec")
     write_fstrec(p, recs)
 
-    reader = _FstRecReaderBase({"path": p, "split_target_bytes": "0"})
+    reader = FstRecReader({"path": p, "split_target_bytes": "0"})
     batches = list(reader.read(_FilePartition(p, 0, 1)))
     assert len(batches) >= 4            # 6x400k -> 3 batches, 1 solo
     keys, vals = [], []
