@@ -11,8 +11,9 @@ sequential across DIMENSIONS — so every fold is bit-identical to the
 engine's sequential ``aggregate(zip_with(...))`` evaluation and to the
 oracle's SQL mirror.
 
-Bit-exactness contract (argued once here, pinned by
-tests/test_ann_kernels.py against the Column implementations):
+Bit-exactness contract (argued once here, pinned against the Column
+implementations, which live in tests/test_ann_kernels.py as the
+oracles — ``ivf_cell_col`` and ``pq_codes_col``):
 
 - dot:  ``acc = 0.0; for j: acc = acc + double(x[j]) * w[j]`` — the
   exact left fold ``aggregate(zip_with(v, w, (x,y) -> double(x)*y),
@@ -80,8 +81,9 @@ def _decompose(vec):
 
 def ivf_cells(vec, weights: np.ndarray, dim: int) -> np.ndarray:
     """IVF cell per row of an Arrow list<float> array — the kernel twin
-    of ``similarity.ivf_cell_col`` (see module docstring for the
-    exactness argument). ``weights``: float64[n_cells, dim]."""
+    of the ``ivf_cell_col`` oracle in tests/test_ann_kernels.py (see
+    module docstring for the exactness argument). ``weights``:
+    float64[n_cells, dim]."""
     n_cells = weights.shape[0]
     row_null, lengths, starts, flat, flat_null = _decompose(vec)
     n = len(row_null)
@@ -120,7 +122,8 @@ def ivf_cells(vec, weights: np.ndarray, dim: int) -> np.ndarray:
 def pq_codes(vec, codebook: np.ndarray, m: int, ksub: int,
              d_sub: int) -> np.ndarray:
     """PQ code matrix int32[n, m] for an Arrow list<float> array — the
-    kernel twin of ``similarity.pq_codes_col`` (see module docstring).
+    kernel twin of the ``pq_codes_col`` oracle in
+    tests/test_ann_kernels.py (see module docstring).
     ``codebook``: float64[m, ksub, d_sub]."""
     row_null, lengths, starts, flat, flat_null = _decompose(vec)
     n = len(row_null)

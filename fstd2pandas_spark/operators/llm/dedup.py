@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fstd2pandas_spark.operators.llm.text import (
-    tokens_col, shingles_col, simhash, sql_ident,
+    _simhash_sql, tokens_col, shingles_col, simhash, sql_ident,
 )
 from fstd2pandas_spark.plans.partitioning import ensure_min_partitions
 
@@ -113,6 +113,31 @@ def base_hash_col(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
 
 
+def _minhash_sig_sql(num_hashes: int) -> str:
+    """The MinHash signature over the shingle base-hash array ``_mh`` as
+    SQL text — the one definition behind :func:`minhash_signature`
+    (through ``F.expr``) and the fused :func:`lsh_candidate_pairs`
+    statement, range check included: ``num_hashes`` = 0 would give
+    every document the identical empty signature (and silently return
+    the empty pair set), > ``len(MINHASH_AS)`` a bare IndexError.
+
+    The per-hash variants are one flat transform + array_min each: far
+    fewer allocations than a fold rebuilding a num_hashes-wide
+    accumulator per shingle; ONE SQL string because the Column DSL
+    would cost hundreds of py4j round-trips to build."""
+    if not 1 <= num_hashes <= len(MINHASH_AS):
+        raise ValueError(
+            f"num_hashes must be in 1..{len(MINHASH_AS)} (the affine "
+            f"coefficient family width), got {num_hashes} — 0 would "
+            "give every document the identical empty signature")
+    terms = ", ".join(
+        "coalesce(array_min(transform(_mh, "
+        f"h -> (cast({MINHASH_AS[i]} as bigint) * h + {MINHASH_BS[i]}) "
+        f"% {MINHASH_P})), cast({MINHASH_P} as bigint))"
+        for i in range(num_hashes))
+    return f"array({terms})"
+
+
 def minhash_signature(df: DataFrame, text_col: str = "text",
                       num_hashes: int = 12, shingle_k: int = 3) -> DataFrame:
     """Add ``sig``: array of `num_hashes` minhash values over word
@@ -130,32 +155,18 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     hash is the fold *input*, so it is computed exactly once per shingle
     regardless of signature width — the variants are integer arithmetic.
     Shuffle-free per-document computation."""
-    if not 1 <= num_hashes <= len(MINHASH_AS):
-        raise ValueError(
-            f"num_hashes must be in 1..{len(MINHASH_AS)} (the affine "
-            f"coefficient family width), got {num_hashes} — 0 would "
-            "give every document the identical empty signature")
+    sig = _minhash_sig_sql(num_hashes)
     # Projection boundaries matter doubly here (CollapseProject keeps
     # expensive multi-referenced aliases, and HOF lambdas have no
     # loop-invariant hoisting): tokens materialize first — an inline
     # split() would re-split the text once PER SHINGLE inside the
-    # transform — then the base-hash array (md5 once per shingle). The
-    # per-hash variants are one flat transform + array_min each: far
-    # fewer allocations than a fold rebuilding a num_hashes-wide
-    # accumulator per shingle. The sig expression is ONE SQL string — the
-    # Column DSL would cost hundreds of py4j round-trips to build.
+    # transform — then the base-hash array (md5 once per shingle).
     df = ensure_min_partitions(df)
     with_t = df.withColumn("_tk", tokens_col(F.col(text_col)))
     sh = shingles_col(F.col("_tk"), shingle_k)
     with_h = with_t.withColumn(
         "_mh", F.transform(sh, base_hash_col)).drop("_tk")
-    terms = ", ".join(
-        "coalesce(array_min(transform(_mh, "
-        f"h -> (cast({MINHASH_AS[i]} as bigint) * h + {MINHASH_BS[i]}) "
-        f"% {MINHASH_P})), cast({MINHASH_P} as bigint))"
-        for i in range(num_hashes)
-    )
-    return with_h.withColumn("sig", F.expr(f"array({terms})")).drop("_mh")
+    return with_h.withColumn("sig", F.expr(sig)).drop("_mh")
 
 
 def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
@@ -202,15 +213,7 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
         raise ValueError(
             f"num_hashes ({num_hashes}) must be a multiple of bands "
             f"({bands}); a ragged banding drops remainder hashes")
-    # the fused SQL no longer routes through minhash_signature, so its
-    # range check must live here too (r19): num_hashes = 0 would
-    # silently return the empty pair set (every band bucket equals the
-    # r = 0 sentinel), and > len(MINHASH_AS) a bare IndexError
-    if not 1 <= num_hashes <= len(MINHASH_AS):
-        raise ValueError(
-            f"num_hashes must be in 1..{len(MINHASH_AS)} (the affine "
-            f"coefficient family width), got {num_hashes} — 0 would "
-            "give every document the identical empty signature")
+    sig = _minhash_sig_sql(num_hashes)
     r = num_hashes // bands
     # DEGENERATE documents (empty shingle set: fewer than shingle_k
     # tokens, or NULL text) all share the all-sentinel signature, so
@@ -241,11 +244,6 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
     # pairs, map-side-combined final n_bands aggregation (plan-locked
     # in tests/test_plans.py; value equivalence vs the unfused
     # minhash_signature building blocks pinned in tests/test_llm.py).
-    sig_terms = ", ".join(
-        "coalesce(array_min(transform(_mh, "
-        f"h -> (cast({MINHASH_AS[i]} as bigint) * h + {MINHASH_BS[i]}) "
-        f"% {MINHASH_P})), cast({MINHASH_P} as bigint))"
-        for i in range(num_hashes))
     k = int(shingle_k)
     shingles = (
         f"CASE WHEN nullif(size(_tk), -1) < {k} "
@@ -264,7 +262,7 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
                  s -> CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT)) AS _mh
         FROM _t
       ),
-      _sig AS (SELECT _id, array({sig_terms}) AS sig FROM _h),
+      _sig AS (SELECT _id, {sig} AS sig FROM _h),
       _b0 AS (
         SELECT _id, explode(transform(sequence(0, {int(bands) - 1}),
                  b -> named_struct('band', b, 'bucket',
@@ -580,16 +578,17 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
     collapse the block keyspace and degenerate toward all-pairs on a
     large corpus.  Returns (doc_a, doc_b, hamming) with doc_a < doc_b.
     """
-    grouped, sizes = _simhash_blocks_grouped(
+    grouped, layout = _simhash_blocks_grouped(
         df, text_col, id_col, bits, max_hamming)
-    return _pairs_from_grouped(grouped, max_hamming, sizes)
+    return _pairs_from_grouped(grouped, max_hamming, layout)
 
 
 def _simhash_blocks_grouped(df: DataFrame, text_col: str, id_col: str,
                             bits: int, max_hamming: int):
     """Shared pigeonhole machinery: ONE signature pass + ONE shuffle
     grouping (block, value) into the sorted (id, simhash) member array.
-    Returns (grouped_df, block_sizes); callers filter/derive from it.
+    Returns (grouped_df, layout) — see :func:`_block_layout`;
+    callers filter/derive from them.
 
     NULL-text rows are excluded HERE, on the source column, before the
     signature projection is even attached — the cheapest point (the
@@ -599,8 +598,7 @@ def _simhash_blocks_grouped(df: DataFrame, text_col: str, id_col: str,
     past this filter the pipeline carries no NULL signatures at all."""
     sh = simhash(df.filter(F.col(text_col).isNotNull()),
                  text_col, bits).select(id_col, "simhash")
-    return _signature_blocks_grouped(sh, "simhash", id_col, bits,
-                                     max_hamming)
+    return _signature_blocks_grouped(sh, id_col, bits, max_hamming)
 
 
 def signature_hamming_pairs(df: DataFrame, sig_col: str,
@@ -627,13 +625,17 @@ def signature_hamming_pairs(df: DataFrame, sig_col: str,
     sh = df.select(
         F.col(id_col).alias("doc_id"),
         F.col(sig_col).cast("long").alias("simhash"))
-    grouped, sizes = _signature_blocks_grouped(sh, "simhash", "doc_id",
-                                               bits, max_hamming)
-    return _pairs_from_grouped(grouped, max_hamming, sizes)
+    grouped, layout = _signature_blocks_grouped(
+        sh, "doc_id", bits, max_hamming)
+    return _pairs_from_grouped(grouped, max_hamming, layout)
 
 
-def _signature_blocks_grouped(sh: DataFrame, sig_col: str, id_col: str,
-                              bits: int, max_hamming: int):
+def _block_layout(bits: int, max_hamming: int) -> "list[tuple[int, int]]":
+    """The pigeonhole block layout, ``(offset, mask)`` per block — the
+    one definition behind the DSL pair path
+    (:func:`_signature_blocks_grouped`) and the fused
+    :func:`simhash_report_rows` statement: ``max_hamming + 1`` blocks
+    cut from the ``bits``-wide signature."""
     n_blocks = max_hamming + 1
     if bits < n_blocks:
         raise ValueError("need at least one bit per block")
@@ -642,22 +644,40 @@ def _signature_blocks_grouped(sh: DataFrame, sig_col: str, id_col: str,
     # document and the per-block equi-join degenerates to all-pairs
     base, rem = divmod(bits, n_blocks)
     sizes = [base + (1 if i < rem else 0) for i in range(n_blocks)]
-    offsets = [sum(sizes[:i]) for i in range(n_blocks)]
+    # a FULL-width block (bits=64, max_hamming=0) needs the all-ones
+    # mask -1: (1 << 64) - 1 overflows a long (F.lit died on it as a
+    # cryptic py4j NumberFormatException)
+    return [(sum(sizes[:i]), (1 << n) - 1 if n < 64 else -1)
+            for i, n in enumerate(sizes)]
+
+
+def _minimal_block_sql(layout: "list[tuple[int, int]]") -> str:
+    """SQL predicate: true iff ``block`` is the FIRST pigeonhole block
+    on which the member signatures ``a.s`` and ``b.s`` agree — the
+    cross-block pair dedup as pure bit arithmetic, shared by
+    :func:`_pairs_from_grouped` (through ``F.expr``) and
+    :func:`simhash_report_rows`."""
+    return " AND ".join(
+        f"(block <= {j} OR (shiftright(a.s, {off}) & {mask}) "
+        f"!= (shiftright(b.s, {off}) & {mask}))"
+        for j, (off, mask) in enumerate(layout[:-1])) or "true"
+
+
+def _signature_blocks_grouped(sh: DataFrame, id_col: str, bits: int,
+                              max_hamming: int):
+    """Group the ``simhash`` signatures of ``sh`` by (block, value);
+    returns (grouped_df, layout) — see :func:`_block_layout`."""
+    layout = _block_layout(bits, max_hamming)
     block_structs = [
-        F.struct(
-            F.lit(i).alias("block"),
-            F.shiftright(F.col(sig_col), offsets[i])
-            # a FULL-width block (bits=64, max_hamming=0) needs the
-            # all-ones mask -1: (1 << 64) - 1 overflows F.lit's long
-            # and died as a cryptic py4j NumberFormatException
-            .bitwiseAND(F.lit((1 << sizes[i]) - 1 if sizes[i] < 64
-                              else -1)).alias("value"))
-        for i in range(n_blocks)
+        F.struct(F.lit(i).alias("block"),
+                 F.shiftright(F.col("simhash"), off)
+                 .bitwiseAND(F.lit(mask)).alias("value"))
+        for i, (off, mask) in enumerate(layout)
     ]
     banded = sh.select(
-        F.col(id_col), F.col(sig_col),
+        F.col(id_col), F.col("simhash"),
         F.explode(F.array(*block_structs)).alias("b"),
-    ).select(id_col, sig_col, "b.block", "b.value")
+    ).select(id_col, "simhash", "b.block", "b.value")
     # sort_array over (id, signature) structs orders by id first, so the
     # positional i<j enumeration emits doc_a < doc_b directly; member
     # structs are narrow (id + long signature), so the group-size
@@ -665,7 +685,7 @@ def _signature_blocks_grouped(sh: DataFrame, sig_col: str, id_col: str,
     grouped = banded.groupBy("block", "value").agg(
         F.sort_array(F.collect_list(
             F.struct(F.col(id_col).alias("i"),
-                     F.col(sig_col).alias("s")))).alias("ms"))
+                     F.col("simhash").alias("s")))).alias("ms"))
     # NULL signatures (undecodable payloads handed to
     # signature_hamming_pairs; the simhash path pre-filters NULL text
     # at the source) would all land in the same (block, NULL) groups —
@@ -683,30 +703,11 @@ def _signature_blocks_grouped(sh: DataFrame, sig_col: str, id_col: str,
     grouped = grouped.filter(F.col("value").isNotNull())
     grouped = grouped.filter(
         require_group_within(F.size("ms"), "signature pigeonhole block"))
-    return grouped, sizes
-
-
-def _minimal_block_pred(sizes: "list[int]", block_col: str,
-                        a_sig: str, b_sig: str) -> Column:
-    """True iff `block_col` is the FIRST pigeonhole block on which the
-    two signatures agree — the pure-bit-arithmetic cross-block pair
-    dedup shared by :func:`_pairs_from_grouped` and
-    :func:`simhash_report_rows` (one definition, two consumers: a mask
-    or offset change cannot desynchronize them)."""
-    offsets = [sum(sizes[:i]) for i in range(len(sizes))]
-    pred = F.lit(True)
-    for j in range(len(sizes) - 1):
-        mask = (1 << sizes[j]) - 1
-        pred = pred & (
-            (F.col(block_col) <= F.lit(j))
-            | (F.shiftright(F.col(a_sig), offsets[j]).bitwiseAND(F.lit(mask))
-               != F.shiftright(F.col(b_sig), offsets[j])
-               .bitwiseAND(F.lit(mask))))
-    return pred
+    return grouped, layout
 
 
 def _pairs_from_grouped(grouped: DataFrame, max_hamming: int,
-                        sizes: "list[int]") -> DataFrame:
+                        layout: "list[tuple[int, int]]") -> DataFrame:
     """Stream i<j pairs out of the per-(block, value) member arrays.
 
     A pair within the Hamming radius can collide in SEVERAL blocks; the
@@ -716,8 +717,8 @@ def _pairs_from_grouped(grouped: DataFrame, max_hamming: int,
     structs, "the pair also agrees on some earlier block j < block" is
     a pure bit-arithmetic predicate, so the dedup costs a few codegen'd
     comparisons per candidate and the pair stream stays narrow (no
-    post-fold shuffle at all).  `sizes` are the per-block bit widths
-    from :func:`_signature_blocks_grouped`.
+    post-fold shuffle at all).  ``layout`` is the block layout from
+    :func:`_block_layout`.
     """
     outer = (grouped.filter(F.size("ms") > 1)
              .select("block", "ms", F.posexplode("ms").alias("_i", "a")))
@@ -725,9 +726,8 @@ def _pairs_from_grouped(grouped: DataFrame, max_hamming: int,
         "block", "a",
         F.explode(
             F.expr("slice(ms, _i + 2, size(ms) - _i - 1)")).alias("b"))
-    minimal_block = _minimal_block_pred(sizes, "block", "a.s", "b.s")
     return (
-        pairs.filter(minimal_block)
+        pairs.filter(F.expr(_minimal_block_sql(layout)))
         .select(
             F.col("a.i").alias("doc_a"), F.col("b.i").alias("doc_b"),
             F.bit_count(F.col("a.s").bitwiseXOR(F.col("b.s")))
@@ -768,7 +768,7 @@ def simhash_report(df: DataFrame, text_col: str = "text",
     dominant population (singleton groups of blocks 1..n) before the
     checkpoint write — at 48-bit signatures that is ~2/3 of the rows.
     """
-    grouped, sizes = _simhash_blocks_grouped(
+    grouped, layout = _simhash_blocks_grouped(
         df, text_col, id_col, bits, max_hamming)
     grouped = grouped.filter(
         (F.col("block") == 0) | (F.size("ms") > 1)
@@ -777,7 +777,7 @@ def simhash_report(df: DataFrame, text_col: str = "text",
         F.col("value").alias("simhash"),
         F.size("ms").alias("n_docs"),
         F.col("ms")[0]["i"].alias("min_doc"))
-    return buckets, _pairs_from_grouped(grouped, max_hamming, sizes)
+    return buckets, _pairs_from_grouped(grouped, max_hamming, layout)
 
 
 def simhash_report_rows(df: DataFrame, text_col: str = "text",
@@ -814,15 +814,8 @@ def simhash_report_rows(df: DataFrame, text_col: str = "text",
             f"{id_type!r} — the fused (v1, v2, v3) long schema needs "
             "an integral id (non-ANSI would silently NULL doc ids "
             "out); use simhash_report for string ids")
-    if not 1 <= bits <= 60:
-        raise ValueError(
-            f"simhash bits must be in 1..60 (md5-prefix base hash), "
-            f"got {bits} — bits < 1 would give every document the "
-            "constant signature 0, collapsing the whole corpus into "
-            "one near-duplicate bucket")
-    n_blocks = max_hamming + 1
-    if bits < n_blocks:
-        raise ValueError("need at least one bit per block")
+    th, sh = _simhash_sql(text_col, bits)
+    layout = _block_layout(bits, max_hamming)
     # r18: the whole pipeline is built as ONE spark.sql statement.
     # The step-by-step Column-DSL build of the same plan cost ~306 ms
     # of pure driver time per call (measured min-of-7 at sf0.1: each
@@ -834,21 +827,11 @@ def simhash_report_rows(df: DataFrame, text_col: str = "text",
     # chained Generates, no post-fold shuffle — is unchanged
     # (plan-locked in tests/test_plans.py; value-equivalence of the
     # fused build is pinned in tests/test_llm.py).
-    base, rem = divmod(bits, n_blocks)
-    sizes = [base + (1 if i < rem else 0) for i in range(n_blocks)]
-    offsets = [sum(sizes[:i]) for i in range(n_blocks)]
     src = ensure_min_partitions(df.filter(F.col(text_col).isNotNull()))
-    counts = (f"aggregate(_th, array_repeat(cast(0 as bigint), {bits}), "
-              "(acc, h) -> transform(acc, (a, i) -> a + (shiftright(h, i) & 1)))")
-    sh = (f"aggregate(transform({counts}, (c, i) -> "
-          "CASE WHEN c * 2 > size(_th) "
-          "THEN shiftleft(cast(1 as bigint), i) ELSE cast(0 as bigint) END), "
-          "cast(0 as bigint), (a, x) -> a + x)")
     block_structs = ", ".join(
         f"named_struct('block', {i}, 'value', "
-        f"(shiftright(simhash, {offsets[i]}) & "
-        f"{(1 << sizes[i]) - 1 if sizes[i] < 64 else -1}))"
-        for i in range(n_blocks))
+        f"(shiftright(simhash, {off}) & {mask}))"
+        for i, (off, mask) in enumerate(layout))
     e_arr = (
         "concat("
         "filter(array(named_struct('k', 0, 'i', -1)), x -> block = 0), "
@@ -856,17 +839,10 @@ def simhash_report_rows(df: DataFrame, text_col: str = "text",
         "   x -> named_struct('k', 1, 'i', cast(x as int))), "
         "   filter(array(named_struct('k', 1, 'i', -1)), x -> false)))"
     )
-    minimal_block = " AND ".join(
-        f"(block <= {j} OR (shiftright(a.s, {offsets[j]}) & "
-        f"{(1 << sizes[j]) - 1}) != (shiftright(b.s, {offsets[j]}) & "
-        f"{(1 << sizes[j]) - 1}))"
-        for j in range(n_blocks - 1)) or "true"
     hamming = "bit_count(a.s ^ b.s)"
     return df.sparkSession.sql(f"""
       WITH _t AS (
-        SELECT {sql_ident(id_col)} AS doc_id,
-               transform(split(lower({sql_ident(text_col)}), ' '),
-                 t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)) AS _th
+        SELECT {sql_ident(id_col)} AS doc_id, {th} AS _th
         FROM {{src}}
       ),
       _sh AS (SELECT doc_id, {sh} AS simhash FROM _t),
@@ -903,7 +879,7 @@ def simhash_report_rows(df: DataFrame, text_col: str = "text",
       FROM _ex2
       WHERE e.k = 0 OR (b IS NOT NULL AND a.i < b.i
                         AND {hamming} <= {int(max_hamming)}
-                        AND {minimal_block})
+                        AND {_minimal_block_sql(layout)})
     """, src=src)
 
 

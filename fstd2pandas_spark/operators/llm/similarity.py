@@ -1,7 +1,7 @@
 """Similarity search over embedding columns (array<float>).
 
 - :func:`cosine_topk` — brute-force cosine top-k: query set x corpus with
-  a window row_number. O(|Q| * N) but embarrassingly parallel; the
+  a ranking window. O(|Q| * N) but embarrassingly parallel; the
   correctness baseline.
 - :func:`lsh_ann_topk` — random-hyperplane LSH with md5-derived +-1
   planes; vectors bucket by their sign pattern and top-k is searched
@@ -14,13 +14,22 @@
   asymmetric-distance search against code reconstructions.
 - :func:`ivf_pq_topk` — the composed billion-scale shape (FAISS
   IndexIVFPQ): IVF bounds candidates, PQ bounds candidate memory.
-- :func:`embedding_neardup` — cosine near-duplicate pairs, LSH-bucketed
-  by default; :func:`random_projection` — J-L dimensionality reduction.
+- :func:`embedding_neardup` — cosine near-duplicate pairs within an LSH
+  bucket (LSH-bucketed only; the exact all-pairs form is a numpy oracle
+  in the tests); :func:`semantic_dedup` — SemDeDup within IVF cells;
+  :func:`random_projection` — J-L dimensionality reduction.
 
 Every index structure is deterministic (md5 seeds, data-ranked seeding,
 order-free quantized sums), so an SQL oracle rebuilds it exactly. Dot
 products run through higher-order array functions (JVM, sequential
 fold => bit-identical to the oracle's list_cosine_similarity).
+
+One cosine: :func:`cosine_col` is the only Column definition (every
+pair plane passes it hoisted per-row norms); :func:`cosine_topk`'s
+one-statement SQL build is the only other spelling. The ranked
+searches share one top-k tail (``_ranked_topk``). The Column forms of
+the IVF cell and PQ code assignments live in tests/test_ann_kernels.py
+as the oracles of the Arrow kernels that replaced them.
 """
 
 from __future__ import annotations
@@ -70,9 +79,10 @@ def _weights_matrix(n_cells: int, dim: int, weights=None):
 
 
 def _codebook_matrix(m: int, ksub: int, d_sub: int, codebook=None):
-    """PQ codebook as float64[m, ksub, d_sub] — the literal values
-    :func:`_pq_centroid` emits, gathered driver-side for the Arrow
-    kernels."""
+    """PQ codebook as float64[m, ksub, d_sub], gathered driver-side for
+    the Arrow kernels: the trained codebook when given
+    (:func:`pq_train`), else the md5 seed (``pq{sub}_{c}_{j}``, the
+    IVF centroid recipe)."""
     import numpy as np
 
     rows = []
@@ -96,11 +106,11 @@ def _append_ann_cols(df: DataFrame, vec_col: str, *,
     dim / m x ksub x d_sub interpreted distance folds PER ROW — the
     repo's largest absolute cost (measured 16.9 s vs 0.32 s for the
     kernel on the sf0.1 embeddings table, 52x). Values are
-    bit-identical to :func:`ivf_cell_col` / :func:`pq_codes_col` — the
-    kernels vectorize across rows but keep the folds sequential across
-    dimensions (the exactness argument lives in
-    ``_ann_kernels.py``; pinned by tests/test_ann_kernels.py on a
-    dirty corpus).
+    bit-identical to those Column forms, which now live in
+    tests/test_ann_kernels.py as the oracles — the kernels vectorize
+    across rows but keep the folds sequential across dimensions (the
+    exactness argument lives in ``_ann_kernels.py``; the tests pin it
+    on a dirty corpus).
 
     ``mapInArrow`` ships EVERY input column through the Python worker
     — callers project ``df`` down to the columns they need first (all
@@ -169,8 +179,19 @@ def _norm(a: Column) -> Column:
     ))
 
 
-def cosine_col(a: Column, b: Column) -> Column:
-    """Cosine similarity between two float arrays (double precision).
+def cosine_col(a: Column, b: Column, na: "Column | None" = None,
+               nb: "Column | None" = None) -> Column:
+    """Cosine similarity between two float arrays (double precision) —
+    the ONE Column cosine of the package (``cosine_topk``'s fused SQL
+    statement is the only other spelling).
+
+    ``na`` / ``nb``: the vectors' norms, when the caller has HOISTED
+    them to the per-row side (r19). A pair plane that folds
+    ``_norm`` inside the per-pair cosine re-folds both vectors for
+    every candidate pair (pairs >> rows); the hoisted column is the
+    same expression over the same vector, so the doubles are identical
+    and the extra 8 bytes per row buy pairs-many norm folds. Omitted,
+    the norms fold inline.
 
     NULL when it is UNDEFINED: a zero-norm vector has no direction
     (the raw division is 0/0 — under ANSI that ABORTS the whole query
@@ -180,14 +201,32 @@ def cosine_col(a: Column, b: Column) -> Column:
     and which passes `NaN >= threshold`, so the dead vector paired
     with everything it met as a maximum-confidence "near-duplicate"
     and hijacked rank 1 of every top-k). A NaN component poisons the
-    fold to NaN the same way. ``try_divide`` maps the zero divisor to
+    fold to NaN the same way. The checked division maps the zero divisor to
     NULL and ``nanvl`` maps a NaN result to NULL — single evaluation
     of the dot and norm folds, no guard re-evaluation — so undefined
     similarities drop out of thresholds and sort AFTER every real
     candidate, matching the module's NULL-metric contract."""
-    return F.nanvl(
-        F.try_divide(_dot(a, b), _norm(a) * _norm(b)),
-        F.lit(None).cast("double"))
+    na = _norm(a) if na is None else na
+    nb = _norm(b) if nb is None else nb
+    return F.nanvl(F.try_divide(_dot(a, b), na * nb),
+                   F.lit(None).cast("double"))
+
+
+def _ranked_topk(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """The top-k tail every ranked search shares: ``rank`` per
+    ``query_id`` by (``score`` desc, ``neighbor_id`` asc), keep ranks
+    ``<= k`` with a defined score, project (query_id, neighbor_id,
+    score, rank).
+
+    A NULL score (zero-norm/NaN input) = no defined similarity = no
+    result row; the filter sits ABOVE the window, where the score is a
+    plain attribute (no pushdown into the fold), and NULLs sort last
+    within each window so surviving ranks stay contiguous."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter((F.col("rank") <= k) & F.col(score).isNotNull())
+            .select("query_id", "neighbor_id", score, "rank"))
 
 
 def cosine_topk(emb: DataFrame, query_ids: list[int] | None = None,
@@ -226,18 +265,11 @@ def cosine_topk(emb: DataFrame, query_ids: list[int] | None = None,
                 "x -> cast(x as double) * cast(x as double)), "
                 "0.0D, (acc, x) -> acc + x))")
 
-    # norms HOISTED to the per-row CTEs (r19, guide §1.2): the former
-    # per-pair `norm(_qv) * norm(_cv)` re-folded BOTH vectors for every
-    # (query, candidate) pair — |Q| * N norm folds where N + |Q|
-    # suffice. The hoisted column is the SAME expression over the same
-    # vector, so the double (and the 6-dp round) is bit-identical.
+    # norms hoisted to the per-row CTEs (the cosine_col rationale)
     cos = (f"round(nanvl(try_divide({dot}, _qn * _cn), "
            "cast(null as double)), 6)")
     src = ensure_min_partitions(emb)
-    # NULL cos (zero-norm/NaN input) = no defined similarity = no
-    # result row; the filter sits ABOVE the window, where cos is a
-    # plain attribute (no pushdown into the fold), and NULLs sort
-    # last within each window so surviving ranks stay contiguous
+    # _r and the final filter are the _ranked_topk tail, in SQL
     return emb.sparkSession.sql(f"""
       WITH _f AS (
         SELECT * FROM {{src}}
@@ -269,22 +301,18 @@ def cosine_topk(emb: DataFrame, query_ids: list[int] | None = None,
 def embedding_neardup(emb: DataFrame, threshold: float = 0.4,
                       id_col: str = "vec_id", vec_col: str = "embedding",
                       *, n_planes: int = 4, dim: int = 64) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: (vec_a, vec_b, cos) for every
-    unordered pair with cosine >= ``threshold``.
+    """Embedding-cosine near-duplicate pairs: (vec_a, vec_b, cos) for
+    unordered pairs with cosine >= ``threshold`` that share an LSH
+    bucket.
 
-    BEHAVIOR CHANGE (v0.2): the default switched from exact all-pairs to
-    LSH bucketing (``n_planes=4``) — approximate: a borderline pair split
-    across buckets is dropped (survival ~ ``(1-theta/pi)^n_planes``).
-    ``n_planes`` is keyword-only so callers opting back into the exact
-    path (``n_planes=0``) do so explicitly.
-
-    The DEFAULT (``n_planes>0``) is the 100 TB shape: candidates are
-    restricted to the same random-hyperplane LSH bucket — bucketing is a
+    LSH-bucketed only — approximate: a borderline pair split across
+    buckets is dropped (survival ~ ``(1-theta/pi)^n_planes``);
+    ``n_planes`` < 1 raises ``ValueError`` (the exact all-pairs O(N^2)
+    form lives in the tests as a numpy oracle). Candidates are
+    restricted to the same random-hyperplane bucket — bucketing is a
     narrow map, the buckets are materialized ONCE behind a
     ``repartition(_bucket)`` so the self-join reuses a single exchange
     subtree (ReusedExchange), and each bucket holds ~N/2^n_planes rows.
-    ``n_planes=0`` is the exact all-pairs O(N^2) baseline, kept only as a
-    small-sf correctness cross-check — never run it on a real corpus.
 
     NULL-embedding rows never pair (no content to compare) and are
     excluded at the SOURCE column (scan-pushed predicate) — unguarded,
@@ -300,45 +328,31 @@ def embedding_neardup(emb: DataFrame, threshold: float = 0.4,
     """
     from fstd2pandas_spark.operators.llm.dedup import require_group_within
 
+    if n_planes < 1:
+        raise ValueError(f"n_planes must be >= 1, got {n_planes}")
     emb = ensure_min_partitions(emb).filter(_searchable(vec_col))
-    # norm HOISTED to the per-row side (r19, guide §1.2): the per-pair
-    # cosine re-folded both vectors' norms for every candidate pair
-    # (pairs >> rows); the hoisted column is the same expression over
-    # the same vector — identical doubles, and the extra 8 bytes/row
-    # through the bucket exchange buy pairs-many norm folds
-    if n_planes > 0:
-        bucketed = emb.select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
-            _norm(F.col(vec_col)).alias("_n"),
-            lsh_bucket_col(F.col(vec_col), n_planes, dim).alias("_bucket"),
-        ).repartition("_bucket")
-        bn = F.count(F.lit(1)).over(Window.partitionBy("_bucket"))
-        bucketed = (bucketed.withColumn("_bn", bn)
-                    .filter(require_group_within(F.col("_bn"),
-                                                 "embedding LSH bucket"))
-                    .drop("_bn"))
-        a = bucketed.select(F.col("_id").alias("vec_a"),
-                            F.col("_v").alias("_va"),
-                            F.col("_n").alias("_na"), "_bucket")
-        b = bucketed.select(F.col("_id").alias("vec_b"),
-                            F.col("_v").alias("_vb"),
-                            F.col("_n").alias("_nb"), "_bucket")
-        # MERGE hint: a broadcast self-join would rebuild the md5 bucket
-        # subtree on the build side (double compute) and broadcasting the
-        # whole corpus is wrong at scale anyway; sort-merge makes both
-        # sides share the ONE repartition exchange (ReusedExchange).
-        joined = a.hint("merge").join(b, "_bucket")
-    else:
-        a = emb.select(F.col(id_col).alias("vec_a"),
-                       F.col(vec_col).alias("_va"),
-                       _norm(F.col(vec_col)).alias("_na"))
-        b = emb.select(F.col(id_col).alias("vec_b"),
-                       F.col(vec_col).alias("_vb"),
-                       _norm(F.col(vec_col)).alias("_nb"))
-        joined = a.crossJoin(b)
-    cos = F.nanvl(F.try_divide(_dot(F.col("_va"), F.col("_vb")),
-                               F.col("_na") * F.col("_nb")),
-                  F.lit(None).cast("double"))
+    bucketed = emb.select(
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
+        _norm(F.col(vec_col)).alias("_n"),
+        lsh_bucket_col(F.col(vec_col), n_planes, dim).alias("_bucket"),
+    ).repartition("_bucket")
+    bn = F.count(F.lit(1)).over(Window.partitionBy("_bucket"))
+    bucketed = (bucketed.withColumn("_bn", bn)
+                .filter(require_group_within(F.col("_bn"),
+                                             "embedding LSH bucket"))
+                .drop("_bn"))
+    a = bucketed.select(F.col("_id").alias("vec_a"),
+                        F.col("_v").alias("_va"),
+                        F.col("_n").alias("_na"), "_bucket")
+    b = bucketed.select(F.col("_id").alias("vec_b"),
+                        F.col("_v").alias("_vb"),
+                        F.col("_n").alias("_nb"), "_bucket")
+    # MERGE hint: a broadcast self-join would rebuild the md5 bucket
+    # subtree on the build side (double compute) and broadcasting the
+    # whole corpus is wrong at scale anyway; sort-merge makes both
+    # sides share the ONE repartition exchange (ReusedExchange).
+    joined = a.hint("merge").join(b, "_bucket")
+    cos = cosine_col(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
     return (
         joined.filter(F.col("vec_a") < F.col("vec_b"))
         .withColumn("cos", F.round(cos, 6))
@@ -363,28 +377,17 @@ def _centroid_col(cell: int, dim: int, weights=None) -> Column:
     return F.lit(_md5_seed(f"ivf{cell}_", dim))
 
 
-def ivf_cell_col(vec: Column, n_cells: int, dim: int,
-                 weights=None) -> Column:
-    """IVF cell assignment: argmax over cells of <vec, centroid_c>
-    (ties break toward the lower cell id).
-
-    Linear argmax (r18): each dot product appears ONCE in a scores
-    array and the winner is ``array_position(scores,
-    array_max(scores))`` — the previous running-best ``when`` chain
-    embedded the accumulated expression twice per step, doubling the
-    (interpreted, HOF-bearing) tree per cell: 2^n_cells dot-product
-    copies evaluated per row. Semantics preserved exactly:
-    first-occurrence-of-max = lowest winning cell (the strictly-greater
-    chain's tie-break); Spark orders NaN greatest and equates NaN=NaN,
-    so a NaN score wins in both forms and position finds the first NaN;
-    an all-NULL score row (NULL/short vector — dot nullability depends
-    only on ``vec``, centroids are literals) fell through every
-    ``when`` to the initial cell 0, which the ``coalesce`` mirrors."""
-    scores = F.array(*[_dot(vec, _centroid_col(c, dim, weights))
-                       for c in range(n_cells)])
-    return F.coalesce(
-        (F.array_position(scores, F.array_max(scores)) - 1).cast("int"),
-        F.lit(0))
+def _probe_cells(vec: Column, n_cells: int, dim: int, weights,
+                 nprobe: int) -> Column:
+    """The query side of an IVF probe: score every centroid, sort, and
+    explode the ``nprobe`` best cells (ties toward the lower cell id —
+    the struct sort's second key)."""
+    scores = F.array(*[
+        F.struct((-_dot(vec, _centroid_col(c, dim, weights))).alias("neg"),
+                 F.lit(c).alias("cell"))
+        for c in range(n_cells)
+    ])
+    return F.explode(F.slice(F.array_sort(scores), 1, nprobe)["cell"])
 
 
 def _searchable(vec_col: str) -> Column:
@@ -510,51 +513,26 @@ def ivf_ann_topk(emb: DataFrame, k: int = 5, n_cells: int = 8,
     emb = ensure_min_partitions(emb).filter(_searchable(vec_col))
     if weights is None and refine:
         weights = lloyd_refine(emb, n_cells, dim, vec_col, iters=refine)
-    # candidate cells via the Arrow kernel (r19, guide §4.2 — value-
-    # identical to ivf_cell_col, see _append_ann_cols); the norm is
-    # hoisted to the per-row side (the cosine_topk rationale — same
-    # expression, identical doubles, pair-many folds saved)
+    # candidate cells via the Arrow kernel (see _append_ann_cols)
     cand = _append_ann_cols(
         emb.select(F.col(id_col).alias("neighbor_id"),
                    F.col(vec_col).alias("_cv"),
                    _norm(F.col(vec_col)).alias("_cn")),
         "_cv", cell=("_cell", n_cells, dim, weights))
-    # per-query top-nprobe cells: score every centroid, rank, explode
-    scores = F.array(*[
-        F.struct(
-            (-_dot(F.col(vec_col), _centroid_col(c, dim, weights))).alias("neg"),
-            F.lit(c).alias("cell"),
-        )
-        for c in range(n_cells)
-    ])
     q = (
         emb.filter(F.col(id_col) < n_queries)
         .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"),
                 _norm(F.col(vec_col)).alias("_qn"),
-                F.explode(
-                    F.slice(F.array_sort(scores), 1, nprobe)["cell"]
-                ).alias("_cell"))
+                _probe_cells(F.col(vec_col), n_cells, dim, weights,
+                             nprobe).alias("_cell"))
     )
-    cos = F.nanvl(F.try_divide(_dot(F.col("_qv"), F.col("_cv")),
-                               F.col("_qn") * F.col("_cn")),
-                  F.lit(None).cast("double"))
+    cos = cosine_col(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn"))
     scored = (
         cand.join(F.broadcast(q), "_cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos", F.round(cos, 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        # NULL cos (zero-norm/NaN input) = no defined similarity = no
-        # result row; the filter sits ABOVE the window, where cos is a
-        # plain attribute (no pushdown into the fold), and NULLs sort
-        # last within each window so surviving ranks stay contiguous
-        .filter((F.col("rank") <= k) & F.col("cos").isNotNull())
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _ranked_topk(scored, "cos", k)
 
 
 def _plane_sign(vec: Column, plane: int, dim: int) -> Column:
@@ -600,9 +578,6 @@ def lsh_ann_topk(emb: DataFrame, k: int = 5, n_planes: int = 4,
     """
     emb = ensure_min_partitions(emb).filter(_searchable(vec_col))
     bucketed = emb.withColumn("_bucket", lsh_bucket_col(F.col(vec_col), n_planes, dim))
-    # norms hoisted to the per-row sides (r19, guide §1.2 — the
-    # cosine_topk rationale): same expression, identical doubles,
-    # candidate-pair-many norm folds saved
     q = bucketed.filter(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"),
         _norm(F.col(vec_col)).alias("_qn"), "_bucket"
@@ -611,26 +586,13 @@ def lsh_ann_topk(emb: DataFrame, k: int = 5, n_planes: int = 4,
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"),
         _norm(F.col(vec_col)).alias("_cn"), "_bucket"
     )
-    cos = F.nanvl(F.try_divide(_dot(F.col("_qv"), F.col("_cv")),
-                               F.col("_qn") * F.col("_cn")),
-                  F.lit(None).cast("double"))
+    cos = cosine_col(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn"))
     scored = (
         cand.join(F.broadcast(q), "_bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos", F.round(cos, 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        # NULL cos (zero-norm/NaN input) = no defined similarity = no
-        # result row; the filter sits ABOVE the window, where cos is a
-        # plain attribute (no pushdown into the fold), and NULLs sort
-        # last within each window so surviving ranks stay contiguous
-        .filter((F.col("rank") <= k) & F.col("cos").isNotNull())
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _ranked_topk(scored, "cos", k)
 
 
 def random_projection(emb: DataFrame, out_dim: int, dim: int,
@@ -748,18 +710,6 @@ def int8_quantize(emb: DataFrame,
 
 # ---------------------------------------------------------------- PQ / ADC
 
-def _pq_centroid(sub: int, c: int, d_sub: int,
-                 codebook=None) -> Column:
-    """PQ sub-centroid as a Column array: a trained literal when a
-    codebook is given (:func:`pq_train`), else the md5-seeded fallback
-    (same recipe as the IVF centroids): w[j] in [-1, 1) from
-    ``pq{sub}_{c}_{j}``. One ``F.lit(list)`` call per sub-centroid
-    (r19, the :func:`_centroid_col` rationale)."""
-    if codebook is not None:
-        return F.lit([float(w) for w in codebook[sub][c]])
-    return F.lit(_md5_seed(f"pq{sub}_{c}_", d_sub))
-
-
 def pq_train(emb: DataFrame, m: int = 8, ksub: int = 16, dim: int = 64,
              vec_col: str = "embedding", id_col: str = "vec_id",
              iters: int = 1) -> list:
@@ -824,39 +774,6 @@ def pq_train(emb: DataFrame, m: int = 8, ksub: int = 16, dim: int = 64,
     return codebook
 
 
-def _l2(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, v: acc + v)
-
-
-def pq_codes_col(vec: Column, m: int, ksub: int, dim: int,
-                 codebook=None) -> Column:
-    """Product-quantization code array (Jegou et al. 2011, public):
-    split the vector into `m` subvectors of dim/m, each coded as the
-    index of its nearest (L2) sub-centroid — ties break toward the
-    lower code. A narrow map: m * ksub fixed-size distance folds."""
-    if dim % m:
-        raise ValueError(f"dim ({dim}) must be a multiple of m ({m})")
-    d_sub = dim // m
-    codes = []
-    for sub in range(m):
-        sv = F.transform(
-            F.slice(vec, sub * d_sub + 1, d_sub),
-            lambda x: x.cast("double"))
-        # argmin via ONE struct sort (ties -> lower code): a when-chain
-        # would reference the running best twice per step and grow the
-        # expression tree 2^ksub
-        entries = F.array(*[
-            F.struct(_l2(sv, _pq_centroid(sub, c, d_sub, codebook))
-                     .alias("d"),
-                     F.lit(c).alias("c"))
-            for c in range(ksub)
-        ])
-        codes.append(F.array_sort(entries)[0]["c"])
-    return F.array(*codes)
-
-
 def pq_encode(emb: DataFrame, m: int = 8, ksub: int = 16, dim: int = 64,
               vec_col: str = "embedding", codebook=None) -> DataFrame:
     """Add ``pq_codes`` (array of m ints) and ``pq_packed`` — the codes
@@ -865,8 +782,8 @@ def pq_encode(emb: DataFrame, m: int = 8, ksub: int = 16, dim: int = 64,
     stored representation: m*log2(ksub) bits per vector instead of
     dim * 32.
 
-    r19: codes come from the Arrow kernel (value-identical twin of
-    :func:`pq_codes_col` — see :func:`_append_ann_cols`); the kernel
+    r19: codes come from the Arrow kernel (see
+    :func:`_append_ann_cols`); the kernel
     pass ships every input column through the Python worker, so keep
     the frame projected to what you need (all in-repo callers do).
     The input is spread to the cluster's parallelism first (a no-op at
@@ -905,6 +822,16 @@ def pq_reconstruct_col(codes: Column, m: int, ksub: int,
     return F.concat(*parts)
 
 
+def _adc_col() -> Column:
+    """The asymmetric-distance score of a (query ``_qv``, candidate
+    ``_recon``) pair, 6 dp: ONE sequential dim-wide fold against the
+    reconstruction (not a sum of per-subspace dots) — the same float
+    grouping as the oracle's list_dot_product, so the rank keys agree
+    bitwise. A NaN score becomes NULL and ranks last."""
+    return F.nanvl(F.round(_dot(F.col("_qv"), F.col("_recon")), 6),
+                   F.lit(None).cast("double"))
+
+
 def pq_adc_topk(emb: DataFrame, k: int = 5, m: int = 8, ksub: int = 16,
                 dim: int = 64, id_col: str = "vec_id",
                 vec_col: str = "embedding", n_queries: int = 10,
@@ -914,9 +841,9 @@ def pq_adc_topk(emb: DataFrame, k: int = 5, m: int = 8, ksub: int = 16,
     score(q, x) = <q, reconstruct(codes_x)> = sum_j <q_j,
     cent[j][code_j]>. The corpus side carries ONLY (id, codes) — m *
     log2(ksub) bits per vector — and the query side broadcasts (it is
-    the small side by construction); compose with
-    :func:`ivf_cell_col` cell filters for IVF-PQ candidate
-    restriction at larger scale. Returns (query_id, neighbor_id, adc,
+    the small side by construction); :func:`ivf_pq_topk` adds IVF
+    cell filters for candidate restriction at larger scale. Returns
+    (query_id, neighbor_id, adc,
     rank) with adc rounded to 6 dp and ranks dense per query.
 
     NULL-embedding rows are excluded (uncodable, unsearchable — the
@@ -939,18 +866,8 @@ def pq_adc_topk(emb: DataFrame, k: int = 5, m: int = 8, ksub: int = 16,
         .alias("_qv"))
     joined = coded.crossJoin(F.broadcast(q)) \
         .filter(F.col("neighbor_id") != F.col("query_id"))
-    # ONE sequential 64-dim fold against the reconstruction (not a sum
-    # of per-subspace dots): same float grouping as the oracle's
-    # list_dot_product, so the 6-dp rank keys agree bitwise
-    scored = joined.select(
-        "query_id", "neighbor_id",
-        F.nanvl(F.round(_dot(F.col("_qv"), F.col("_recon")), 6),
-                F.lit(None).cast("double")).alias("adc"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter((F.col("rank") <= k)
-                    & F.col("adc").isNotNull()))
+    scored = joined.select("query_id", "neighbor_id", _adc_col().alias("adc"))
+    return _ranked_topk(scored, "adc", k)
 
 
 def ivf_pq_topk(emb: DataFrame, k: int = 5, n_cells: int = 8,
@@ -981,9 +898,8 @@ def ivf_pq_topk(emb: DataFrame, k: int = 5, n_cells: int = 8,
         codebook = pq_train(emb, m, ksub, dim, vec_col, id_col,
                             iters=train_iters)
     d_sub = dim // m
-    # ONE Arrow pass assigns both the IVF cell and the PQ codes (r19,
-    # guide §4.2 — one boundary crossing, value-identical twins of
-    # ivf_cell_col / pq_codes_col; see _append_ann_cols)
+    # ONE Arrow pass assigns both the IVF cell and the PQ codes (r19:
+    # one boundary crossing; see _append_ann_cols)
     cand = _append_ann_cols(
         emb.select(F.col(id_col).alias("neighbor_id"),
                    F.col(vec_col).alias("_v")),
@@ -994,32 +910,16 @@ def ivf_pq_topk(emb: DataFrame, k: int = 5, n_cells: int = 8,
         "neighbor_id", "_cell",
         pq_reconstruct_col(F.col("_codes"), m, ksub, d_sub, codebook)
         .alias("_recon"))
-    probe_scores = F.array(*[
-        F.struct(
-            (-_dot(F.col(vec_col), _centroid_col(c, dim, weights)))
-            .alias("neg"),
-            F.lit(c).alias("cell"))
-        for c in range(n_cells)
-    ])
     q = (emb.filter(F.col(id_col) < n_queries)
          .select(F.col(id_col).alias("query_id"),
                  F.transform(F.col(vec_col),
                              lambda x: x.cast("double")).alias("_qv"),
-                 F.explode(
-                     F.slice(F.array_sort(probe_scores), 1, nprobe)
-                     ["cell"]).alias("_cell")))
+                 _probe_cells(F.col(vec_col), n_cells, dim, weights,
+                              nprobe).alias("_cell")))
     scored = (cand.join(F.broadcast(q), "_cell")
               .filter(F.col("neighbor_id") != F.col("query_id"))
-              .select("query_id", "neighbor_id",
-                      F.nanvl(
-                          F.round(_dot(F.col("_qv"), F.col("_recon")),
-                                  6),
-                          F.lit(None).cast("double")).alias("adc")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter((F.col("rank") <= k)
-                    & F.col("adc").isNotNull()))
+              .select("query_id", "neighbor_id", _adc_col().alias("adc")))
+    return _ranked_topk(scored, "adc", k)
 
 
 def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
@@ -1053,8 +953,7 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
     from fstd2pandas_spark.operators.llm.dedup import require_group_within
 
     w = lloyd_refine(emb, n_cells, dim, vec_col, iters=train_iters)
-    # cells via the Arrow kernel (r19 — value-identical twin of
-    # ivf_cell_col; see _append_ann_cols)
+    # cells via the Arrow kernel (see _append_ann_cols)
     assigned = _append_ann_cols(
         ensure_min_partitions(emb).select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
@@ -1078,12 +977,9 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
                .withColumn("_cn", cell_n)
                .filter(require_group_within(F.col("_cn"), "SemDeDup cell"))
                .drop("_cn"))
-    # each member's norm rides the struct (r19, guide §1.2): the pair
-    # filter's cosine re-folded BOTH norms per candidate pair (pairs
-    # grow quadratically per cell, norms only linearly); same
-    # expression over the same vector — identical doubles. The struct
-    # sort order is unchanged: `n` is a function of `v`, so the added
-    # third field can never break an (i, v) tie differently.
+    # each member's norm rides the struct (hoisted: the cosine_col
+    # rationale); `n` is a function of `v`, so the third field can
+    # never break an (i, v) tie differently in the sort
     grouped = (guarded.groupBy("cell")
                .agg(F.sort_array(F.collect_list(
                    F.struct(F.col("id").alias("i"),
@@ -1092,9 +988,7 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
                .filter(F.size("ms") > 1))
     outer = grouped.select(
         "cell", "ms", F.posexplode("ms").alias("_i", "a"))
-    cos = F.nanvl(F.try_divide(_dot(F.col("a.v"), F.col("b.v")),
-                               F.col("a.n") * F.col("b.n")),
-                  F.lit(None).cast("double"))
+    cos = cosine_col(F.col("a.v"), F.col("b.v"), F.col("a.n"), F.col("b.n"))
     pairs = (outer.select(
         "a",
         F.explode(F.expr("slice(ms, _i + 2, size(ms) - _i - 1)"))

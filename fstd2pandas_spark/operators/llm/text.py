@@ -287,35 +287,45 @@ def simhash(df: DataFrame, text_col: str = "text", bits: int = 16,
     counts to sign votes at the end. Measured at sf0.1 this is ~1.5x the
     throughput of 16 unrolled per-bit folds (each re-walking the array).
     """
-    # token-hash array behind a projection boundary: md5 once per token.
-    # Built as ONE SQL string — a wide expression assembled via the
-    # Column DSL costs hundreds of py4j round-trips (~2 s of pure
-    # driver-side build time); expr() parses it JVM-side in one call.
-    # The base hash takes 15 hex digits (60 bits, the widest md5 prefix
-    # that fits a signed bigint): an 8-digit (32-bit) base would leave
-    # bits 32+ of wider signatures constant-zero, which silently
-    # degenerates the pigeonhole blocks of
-    # :func:`~fstd2pandas_spark.operators.llm.dedup.simhash_hamming_pairs`
-    # covering those bits into an all-pairs join.
+    # token-hash array behind a projection boundary: md5 once per token
+    th, sh = _simhash_sql(text_col, bits)
+    df = ensure_min_partitions(df)
+    return (df.withColumn("_th", F.expr(th))
+            .withColumn(out_col, F.expr(sh)).drop("_th"))
+
+
+def _simhash_sql(text_col: str, bits: int) -> "tuple[str, str]":
+    """The SimHash signature as SQL text, the one definition behind
+    :func:`simhash` (through ``F.expr``) and the fused
+    ``dedup.simhash_report_rows`` statement: ``(token_hashes, fold)`` —
+    the per-token hash array of ``text_col`` (quoted through
+    :func:`sql_ident`) and the count/sign fold over that array bound
+    as ``_th``.
+
+    SQL text because a wide expression assembled via the Column DSL
+    costs hundreds of py4j round-trips (~2 s of pure driver-side build
+    time); ``expr()`` parses it JVM-side in one call. The token hash
+    takes 15 hex digits (60 bits, the widest md5 prefix that fits a
+    signed bigint): an 8-digit (32-bit) base would leave bits 32+ of
+    wider signatures constant-zero, which silently degenerates the
+    pigeonhole blocks of
+    :func:`~fstd2pandas_spark.operators.llm.dedup.simhash_hamming_pairs`
+    covering those bits into an all-pairs join."""
     if not 1 <= bits <= 60:
         raise ValueError(
             f"simhash bits must be in 1..60 (md5-prefix base hash), "
             f"got {bits} — bits < 1 would give every document the "
             "constant signature 0, collapsing the whole corpus into "
             "one near-duplicate bucket")
-    df = ensure_min_partitions(df)
-    with_h = df.withColumn(
-        "_th",
-        F.expr(f"transform(split(lower({text_col}), ' '), "
-               "t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint))"),
-    )
+    th = (f"transform(split(lower({sql_ident(text_col)}), ' '), "
+          "t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint))")
     counts = (f"aggregate(_th, array_repeat(cast(0 as bigint), {bits}), "
               "(acc, h) -> transform(acc, (a, i) -> a + (shiftright(h, i) & 1)))")
     sh = (f"aggregate(transform({counts}, (c, i) -> "
           "CASE WHEN c * 2 > size(_th) "
           "THEN shiftleft(cast(1 as bigint), i) ELSE cast(0 as bigint) END), "
           "cast(0 as bigint), (a, x) -> a + x)")
-    return with_h.withColumn(out_col, F.expr(sh)).drop("_th")
+    return th, sh
 
 
 #: default Gopher-rule thresholds (Rae et al. 2021 §A1.1, adapted)

@@ -49,18 +49,27 @@ def array_stats_columns(d: "Column | str" = "d",
     value-identical, pinned by the fst_stats oracle gate and
     test_operators)."""
     def _as_ident(c, what: str) -> str:
-        # Column back-compat is for bare identifiers ONLY (r19 guard):
-        # a composite expression would be silently re-parsed as SQL
-        # text with potentially different semantics, so reject it.
-        if not isinstance(c, str):
-            try:
-                c = c._jc.toString()
-            except AttributeError:  # e.g. Spark Connect Column
-                raise TypeError(
-                    f"array_stats_columns: pass {what} as a column NAME "
-                    "(str); Column objects are only supported on classic "
-                    "PySpark and only for bare identifiers") from None
-        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*", c):
+        # Bare and dotted names pass through; any other plain-string
+        # name (``my d``) is backtick-quoted, so it can only ever name
+        # a column. Column back-compat is for bare identifiers ONLY
+        # (r19 guard): a composite expression would be silently
+        # re-parsed as SQL text with potentially different semantics,
+        # so reject it.
+        bare = r"[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*"
+        if isinstance(c, str):
+            if re.fullmatch(bare, c):
+                return c
+            from fstd2pandas_spark.operators.llm.text import sql_ident
+
+            return sql_ident(c)
+        try:
+            c = c._jc.toString()
+        except AttributeError:  # e.g. Spark Connect Column
+            raise TypeError(
+                f"array_stats_columns: pass {what} as a column NAME "
+                "(str); Column objects are only supported on classic "
+                "PySpark and only for bare identifiers") from None
+        if not re.fullmatch(bare, c):
             raise TypeError(
                 f"array_stats_columns: {what}={c!r} is not a bare column "
                 "identifier; pass a plain column name")

@@ -16,7 +16,12 @@ fails the build the moment such a name lands:
 - no module-level import may be unused (referenced nowhere in the
   file, not re-exported via ``__all__``) — the dead ``jpath`` import
   the r12 refactor also left behind.  ``__init__.py`` files are
-  exempt (imports there ARE the re-export surface).
+  exempt (imports there ARE the re-export surface),
+- every ``from fstd2pandas_spark... import name`` in the callers
+  OUTSIDE the package (``tools/*.py``, ``__spark_entry__.py``), at any
+  scope, must resolve to a name the module defines — a tool or gate
+  that imports a moved or deleted helper fails here, at collection
+  speed, not at its next manual run.
 
 The checker is itself tested against injected defects (a dangling
 name, an unused import) so a silent checker regression cannot pass.
@@ -233,6 +238,33 @@ def unused_imports(src: str, filename: str = "<src>") -> "list[str]":
                   for name, ln in imported.items() if name not in used)
 
 
+def unresolved_package_imports(src: str,
+                               filename: str = "<src>") -> "list[str]":
+    """``from fstd2pandas_spark... import name`` statements, at any
+    scope, whose module does not define ``name`` (as an attribute or a
+    submodule) — or whose module does not exist."""
+    tree = ast.parse(src, filename)
+    bad: set[str] = set()
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.ImportFrom) and node.level == 0
+                and node.module
+                and node.module.split(".")[0] == PKG.name):
+            continue
+        try:
+            mod = importlib.import_module(node.module)
+        except ModuleNotFoundError:
+            bad.add(f"{node.module} (line {node.lineno})")
+            continue
+        for alias in node.names:
+            if alias.name == "*" or hasattr(mod, alias.name):
+                continue
+            try:
+                importlib.import_module(f"{node.module}.{alias.name}")
+            except ModuleNotFoundError:
+                bad.add(f"{node.module}.{alias.name} (line {node.lineno})")
+    return sorted(bad)
+
+
 def _py_files() -> "list[pathlib.Path]":
     return sorted(PKG.rglob("*.py"))
 
@@ -277,6 +309,20 @@ def test_no_unused_module_level_imports():
     assert not problems, (
         "module-level imports referenced nowhere (dead API debris):\n"
         + "\n".join(problems))
+
+
+def test_outside_callers_import_defined_names():
+    callers = (sorted((PKG_ROOT / "tools").glob("*.py"))
+               + [PKG_ROOT / "__spark_entry__.py"])
+    assert len(callers) > 1
+    problems = []
+    for p in callers:
+        bad = unresolved_package_imports(p.read_text(), str(p))
+        if bad:
+            problems.append(f"{p.relative_to(PKG_ROOT)}: {bad}")
+    assert not problems, (
+        "package names imported by tools / the entry module that the "
+        "package no longer defines:\n" + "\n".join(problems))
 
 
 # ---- the checker is itself checked against injected defects ----
@@ -333,6 +379,26 @@ class C:
 
 def test_checker_catches_injected_dangling_name():
     assert dangling_names(_INJECTED_DANGLING) == ["_fs"]
+
+
+_INJECTED_MOVED_HELPER = '''
+from fstd2pandas_spark.operators.llm import _ann_kernels
+from fstd2pandas_spark.operators.llm.similarity import cosine_col
+
+
+def main():
+    from fstd2pandas_spark.operators.llm.similarity import (
+        _no_such_helper, lloyd_refine)
+    from fstd2pandas_spark.no_such_module import anything
+    return _ann_kernels, cosine_col, _no_such_helper, lloyd_refine, anything
+'''
+
+
+def test_checker_catches_moved_helper_import():
+    assert unresolved_package_imports(_INJECTED_MOVED_HELPER) == [
+        "fstd2pandas_spark.no_such_module (line 9)",
+        "fstd2pandas_spark.operators.llm.similarity._no_such_helper "
+        "(line 7)"]
 
 
 def test_checker_catches_injected_unused_import():

@@ -219,11 +219,31 @@ def test_embedding_neardup_pairs_ordered(emb):
 
 
 def test_embedding_neardup_lsh_subset_of_exact(emb):
-    exact = {(r.vec_a, r.vec_b)
-             for r in embedding_neardup(emb, threshold=0.3, n_planes=0).collect()}
-    lsh = {(r.vec_a, r.vec_b)
+    """LSH pairs are a subset of the exact all-pairs answer (a numpy
+    oracle: every pair whose 6-dp cosine is >= 0.3), and each reported
+    cos matches the oracle's."""
+    vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64)
+            for r in emb.toPandas().itertuples()
+            if r.embedding is not None}
+    ids = sorted(vecs)
+    exact = {}
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            u, v = vecs[a], vecs[b]
+            c = round(float(u @ v / (np.linalg.norm(u) * np.linalg.norm(v))),
+                      6)
+            if c >= 0.3:
+                exact[(a, b)] = c
+    lsh = {(r.vec_a, r.vec_b): r.cos
            for r in embedding_neardup(emb, threshold=0.3, n_planes=2).collect()}
-    assert lsh <= exact
+    assert lsh, "fixture should produce at least one LSH pair"
+    assert set(lsh) <= set(exact)
+    assert all(abs(c - exact[p]) <= 1e-6 for p, c in lsh.items())
+
+
+def test_embedding_neardup_rejects_no_planes(emb):
+    with pytest.raises(ValueError, match="n_planes"):
+        embedding_neardup(emb, threshold=0.3, n_planes=0)
 
 
 def test_embedding_neardup_default_is_bucketed_no_cartesian(spark, sf_dir):
@@ -1150,6 +1170,23 @@ def test_simhash_hamming_pairs_match_bruteforce(spark, docs):
     assert expected, "fixture should contain at least one near pair"
     # radius > 0 finds pairs exact-signature bucketing cannot
     assert any(h > 0 for (_, _, h) in got)
+
+
+def test_simhash_pairs_quote_the_text_column(spark, docs):
+    """The DSL pair path and the fused report share one SimHash
+    definition, so both accept a text column that needs quoting and
+    report the same pairs."""
+    from fstd2pandas_spark.operators.llm.dedup import (
+        simhash_hamming_pairs, simhash_report_rows)
+
+    sub = docs.limit(60).withColumnRenamed("text", "doc text")
+    dsl = {(r.doc_a, r.doc_b, r.hamming) for r in simhash_hamming_pairs(
+        sub, text_col="doc text", bits=16, max_hamming=3).collect()}
+    fused = {(r.v1, r.v2, r.v3) for r in simhash_report_rows(
+        sub, text_col="doc text", bits=16, max_hamming=3)
+        .filter("kind = 'pair'").collect()}
+    assert dsl, "fixture should contain at least one near pair"
+    assert dsl == fused
 
 
 def test_simhash_report_rows_match_two_frame_report(spark, docs):
@@ -2099,10 +2136,10 @@ def test_similarity_degenerate_vector_guards(spark):
          (5, [0.0, 1.0, 0.0, 0.0])],
         "vec_id long, embedding array<float>")
 
-    # (a)+(b) neardup, exact AND bucketed: no crash, and the
+    # (a)+(b) neardup, one and two planes: no crash, and the
     # degenerate rows (zero/NULL/NaN) pair with NOTHING — not even
     # their identical twin
-    for planes in (0, 2):
+    for planes in (1, 2):
         got = embedding_neardup(emb.unionByName(
             spark.createDataFrame([(6, [0.0, 0.0, 0.0, 0.0])],
                                   "vec_id long, embedding array<float>")),

@@ -7,10 +7,11 @@ paths used to validate or accept for free:
 - interpolated column names are backtick-quoted (``sql_ident``) so
   names with spaces/hyphens keep working and an expression-valued
   "name" is never executed as SQL;
-- ``lsh_candidate_pairs`` re-validates ``num_hashes`` (the fused form
-  no longer routes through ``minhash_signature``'s check);
+- ``lsh_candidate_pairs`` validates ``num_hashes`` (the fused form
+  shares ``minhash_signature``'s signature helper and its check);
 - ``array_stats_columns``' Column back-compat path accepts ONLY bare
   identifiers and raises instead of silently re-parsing an expression;
+  a plain-string name that is not a bare identifier is quoted;
 - the entry module's schema cache keys on the file mtime so a
   regenerated dataset re-infers instead of reading a stale schema.
 """
@@ -77,8 +78,29 @@ def test_array_stats_columns_rejects_expressions(spark):
     # a composite expression would be silently re-parsed as SQL — reject
     with pytest.raises(TypeError, match="bare column identifier"):
         array_stats_columns(F.col("d") + 1, "ni")
-    with pytest.raises(TypeError, match="bare column identifier"):
-        array_stats_columns("d; drop table x", "ni")
+    # a string that is not a bare name is quoted: it can only name a
+    # column (here a missing one), never run as SQL text
+    from pyspark.errors import AnalysisException
+
+    df = spark.createDataFrame([([1.0, 2.0], 1)], "d array<float>, ni int")
+    with pytest.raises(AnalysisException, match="d; drop table x"):
+        df.select(*array_stats_columns("d; drop table x", "ni")).collect()
+
+
+def test_array_stats_columns_quotes_plain_string_names(spark):
+    """Legal names that need quoting (``my d``) work as plain strings
+    and give the bare-name result on the renamed frame."""
+    from fstd2pandas_spark.operators.stats import array_stats_columns
+
+    df = spark.createDataFrame(
+        [([1.0, float("nan"), 0.5, 2.0], 2), ([3.0, 1.0, 2.0, 1.0], 2),
+         ([4.0], 1)], "d array<float>, ni int")
+    bare = df.select(*array_stats_columns("d", "ni")).collect()
+    renamed = df.withColumnRenamed("d", "my d") \
+        .withColumnRenamed("ni", "my ni")
+    quoted = renamed.select(*array_stats_columns("my d", "my ni")).collect()
+    # repr: the NaN row must compare equal too
+    assert repr(quoted) == repr(bare)
 
 
 def test_schema_cache_keys_on_mtime(tmp_path, spark):
