@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fstd2pandas_spark.session import per_spark_context
 from fstd2pandas_spark.schema import (
     DATYP_DICT,
     KIND_DICT,
@@ -181,19 +182,10 @@ def interval_struct(nomvar: Column, ip1: Column, ip2: Column, ip3: Column) -> Co
     )
 
 
-def with_decoded_columns(df: DataFrame) -> DataFrame:
-    """The full decode cascade (reference ``add_columns``,
-    dataframe.py:582-629): one `select`, all native expressions, so Catalyst
-    folds it into the scan projection.
-
-    Adds: label/run/implementation/ensemble_member, unit/description (via
-    broadcast stdvar join), date_of_observation/date_of_validity,
-    forecast_hour (seconds), data_type_str, level/ip1_kind/ip1_pkind,
-    ip2_dec/ip2_kind/ip2_pkind, ip3_dec/ip3_kind/ip3_pkind, surface,
-    follow_topography, ascending, interval, and the 8 typvar flags.
-    """
-    from fstd2pandas_spark.lookups import stdvar_df
-
+@per_spark_context
+def _decode_columns() -> "tuple[Column, ...]":
+    """The decode cascade's Columns, built once per live SparkContext:
+    ~30 columns of py4j round trips cost ~1 s a build."""
     et = parsed_etiket(F.col("etiket"))
     k1 = decode_ip_kind(F.col("ip1"))
     v1 = decode_ip_value(F.col("ip1"))
@@ -210,8 +202,7 @@ def with_decoded_columns(df: DataFrame) -> DataFrame:
     k3 = F.when(is_axis | (F.col("ip3") < 32768), F.lit(100)).otherwise(k3)
     v3 = F.when(is_axis, F.col("ip3").cast("double")).otherwise(v3)
 
-    decoded = df.select(
-        "*",
+    return (
         et["label"].alias("label"),
         et["run"].alias("run"),
         et["implementation"].alias("implementation"),
@@ -234,7 +225,25 @@ def with_decoded_columns(df: DataFrame) -> DataFrame:
         level_ascending(k1).alias("ascending"),
         interval_struct(F.col("nomvar"), F.col("ip1"), F.col("ip2"), F.col("ip3")).alias("interval"),
         *typvar_flags(F.col("typvar")),
+        F.coalesce(F.col("_u"), F.lit("scalar")).alias("unit"),
+        F.coalesce(F.col("_d"), F.lit("")).alias("description"),
     )
+
+
+def with_decoded_columns(df: DataFrame) -> DataFrame:
+    """The full decode cascade (reference ``add_columns``,
+    dataframe.py:582-629): one `select`, all native expressions, so Catalyst
+    folds it into the scan projection.
+
+    Adds: label/run/implementation/ensemble_member, unit/description (via
+    broadcast stdvar join), date_of_observation/date_of_validity,
+    forecast_hour (seconds), data_type_str, level/ip1_kind/ip1_pkind,
+    ip2_dec/ip2_kind/ip2_pkind, ip3_dec/ip3_kind/ip3_pkind, surface,
+    follow_topography, ascending, interval, and the 8 typvar flags.
+    """
+    from fstd2pandas_spark.lookups import stdvar_df
+
+    *decode, unit, description = _decode_columns()
     lookup = F.broadcast(
         stdvar_df().select(
             "nomvar",
@@ -242,9 +251,11 @@ def with_decoded_columns(df: DataFrame) -> DataFrame:
             F.col("description_en").alias("_d"),
         )
     )
-    return (
-        decoded.join(lookup, "nomvar", "left")
-        .withColumn("unit", F.coalesce(F.col("_u"), F.lit("scalar")))
-        .withColumn("description", F.coalesce(F.col("_d"), F.lit("")))
-        .drop("_u", "_d")
-    )
+    joined = df.select("*", *decode).join(lookup, "nomvar", "left")
+    # an input column named unit/description is replaced in place; the
+    # others are quoted, so a name like `a.b` stays one column
+    tail = {"unit": unit, "description": description}
+    return joined.select(
+        *[tail.pop(c) if c in tail else F.col("`" + c.replace("`", "``") + "`")
+          for c in joined.columns if c not in ("_u", "_d")],
+        *tail.values())

@@ -27,13 +27,12 @@ multiplies scans by funnel depth — the fold reads the events once.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fstd2pandas_spark.functions.timeutil import (ntz_epoch_us,
                                                   ntz_trunc)
+from fstd2pandas_spark.session import per_spark_context
 
 
 def funnel_steps(df: DataFrame, steps: "list[str]", ts_col: str = "ts",
@@ -50,7 +49,7 @@ def funnel_steps(df: DataFrame, steps: "list[str]", ts_col: str = "ts",
     pseudo-user whose "funnel" chains steps that never co-occurred —
     excluded explicitly, like sessionize.
     """
-    ev, folded = _funnel_fold(steps, ts_col, type_col, id_col, within)
+    ev, folded = _funnel_fold(tuple(steps), ts_col, type_col, id_col, within)
     grouped = (df.filter(F.col(user_col).isNotNull())
                .groupBy(F.col(user_col).alias("user")).agg(ev.alias("_ev")))
     return (
@@ -59,27 +58,14 @@ def funnel_steps(df: DataFrame, steps: "list[str]", ts_col: str = "ts",
     )
 
 
-def _funnel_fold(steps: "list[str]", ts_col: str, type_col: str,
+@per_spark_context
+def _funnel_fold(steps: "tuple[str, ...]", ts_col: str, type_col: str,
                  id_col: str, within: "int | None"):
     """The shared fold machinery: (sorted-events aggregate expression,
     fold-over-'_ev' Column) used by :func:`funnel_steps` and
-    :func:`user_activity_report`. Memoized on its parameters (r18):
-    building these Column trees costs ~70 ms of py4j round trips per
-    call, and Columns are immutable unresolved expressions — safe to
-    reuse across DataFrames and queries WITHIN one JVM gateway: the
-    key carries the active SparkContext's identity (r19) so a
-    stop()/relaunch in a long-lived process gets fresh Columns instead
-    of dead py4j references."""
-    from pyspark import SparkContext
-    tok = id(SparkContext._active_spark_context)
-    return _funnel_fold_cached(tok, tuple(steps), ts_col, type_col,
-                               id_col, within)
-
-
-@lru_cache(maxsize=64)
-def _funnel_fold_cached(_session_tok: int, steps: "tuple[str, ...]",
-                        ts_col: str, type_col: str, id_col: str,
-                        within: "int | None"):
+    :func:`user_activity_report`. Memoized on its parameters per live
+    SparkContext (r18): building these Column trees costs ~70 ms of
+    py4j round trips per call."""
     if not steps:
         raise ValueError("funnel: need at least one step")
     k = len(steps)
@@ -183,7 +169,7 @@ def user_activity_report(df: DataFrame, steps: "list[str]",
         raise ValueError(f"unsupported period {period!r}")
     p = ntz_trunc(period, F.col(ts_col))  # TZ-free wall-time trunc
     # (round 17: date_trunc itself session-TZ-casts NTZ input)
-    ev, folded = _funnel_fold(steps, ts_col, type_col, id_col, within)
+    ev, folded = _funnel_fold(tuple(steps), ts_col, type_col, id_col, within)
     # NULL-identity exclusion (round 16, the sessions.py contract): a
     # NULL user key pools unrelated unidentified events into one
     # pseudo-user's funnel/cohort — excluded explicitly

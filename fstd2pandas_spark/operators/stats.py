@@ -92,31 +92,34 @@ def array_stats_columns(d: "Column | str" = "d",
 
     nj = f"cast(floor(size({d}) / {ni}) as bigint)"
 
-    def _lex_argpos(pred: str) -> str:
-        # (i, j) of the matching element FIRST in (i, j)-lexicographic
-        # order: np.argmin/argmax flatten the reference's (ni, nj)
-        # array C-order — the traversal visits positions in (i, j) lex
-        # order (last axis fastest) — so among ties the reference picks
-        # the smallest (i, j), while array_position's first-in-flat-
-        # storage pick is smallest (j, i) (d is stored ni-fastest).
-        # Encoded as ONE long key i0*nj + j0 per matching slot (the lex
-        # order linearized) + array_min over longs — a struct-keyed
-        # variant measured ~2x slower on the sf0.1 bench (per-element
-        # struct boxing); non-matching slots are NULL, which array_min
-        # skips.
-        k = (f"array_min(transform({d}, (x, p0) -> "
-             f"CASE WHEN {pred} THEN "
-             f"cast(p0 % {ni} as bigint) * {nj} + floor(p0 / {ni}) END))")
-        return (f"named_struct("
-                f"'i', cast(floor({k} / {nj}) + 1 as int), "
-                f"'j', cast({k} % {nj} + 1 as int))")
+    def _lex_argpos(extreme: str) -> str:
+        # (i, j) of the element equal to ``extreme`` FIRST in (i, j)-
+        # lexicographic order: np.argmin/argmax flatten the reference's
+        # (ni, nj) array C-order — the traversal visits positions in
+        # (i, j) lex order (last axis fastest) — so among ties the
+        # reference picks the smallest (i, j), while array_position's
+        # first-in-flat-storage pick is smallest (j, i) (d is stored
+        # ni-fastest). Encoded as ONE long key i0*nj + j0 per matching
+        # slot (the lex order linearized) + array_min over longs — a
+        # struct-keyed variant measured ~2x slower on the sf0.1 bench
+        # (per-element struct boxing); non-matching slots are NULL,
+        # which array_min skips.
+        # ``extreme`` is the reported min/max, NaN when the field holds
+        # one; SQL `=` holds for NaN = NaN, so the NaN rule (first NaN)
+        # needs no branch of its own. The extreme and the key are each
+        # bound once per record through a one-element transform: an
+        # extreme written inside the keyed lambda is a full array pass
+        # per element, O(n^2) a record.
+        key = (f"array_min(transform({d}, (x, p0) -> "
+               f"CASE WHEN cast(x as double) = m THEN "
+               f"cast(p0 % {ni} as bigint) * {nj} + floor(p0 / {ni}) END))")
+        return (f"transform(array({extreme}), m -> "
+                f"transform(array({key}), k -> named_struct("
+                f"'i', cast(floor(k / {nj}) + 1 as int), "
+                f"'j', cast(k % {nj} + 1 as int)))[0])[0]")
 
-    pmin = (f"CASE WHEN {has_nan} "
-            f"THEN {_lex_argpos('isnan(cast(x as double))')} "
-            f"ELSE {_lex_argpos(f'x = array_min({d})')} END")
-    pmax = (f"CASE WHEN {has_nan} "
-            f"THEN {_lex_argpos('isnan(cast(x as double))')} "
-            f"ELSE {_lex_argpos(f'x = array_max({d})')} END")
+    pmin = _lex_argpos(mn)
+    pmax = _lex_argpos(mx)
 
     return [
         F.expr(mn).alias("min"), F.expr(mx).alias("max"),

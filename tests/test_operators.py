@@ -221,6 +221,50 @@ def test_fststat_nan_and_tie_parity_with_numpy(spark):
             == (mx[0] + 1, mx[1] + 1), r["d"]
 
 
+def test_fststat_positions_bind_extremes_once_64x48(spark):
+    """min_pos/max_pos on full-size 64x48 fields with many ties (values
+    drawn from 0..49) and with NaNs, against numpy's argmin/argmax over
+    the (ni, nj) array; and the plan binds each extreme once per record:
+    no array_min(d)/array_max(d) inside the keyed per-element lambda,
+    where it made the position search O(n^2) a record."""
+    import re
+
+    import numpy as np
+
+    from fstd2pandas_spark.operators.stats import array_stats_columns
+
+    ni, nj = 64, 48
+    rng = np.random.default_rng(5)
+    ties = rng.integers(0, 50, ni * nj).astype(np.float32)
+    nans = ties.copy()
+    nans[[1500, 77]] = np.nan                  # first NaN in (i, j) order
+    flat = np.full(ni * nj, 2.5, np.float32)   # all tie: (1, 1)
+    df = spark.createDataFrame(
+        [(a.tolist(), ni) for a in (ties, nans, flat, -ties)],
+        "d array<float>, ni int")
+    q = df.select("d", "ni", *array_stats_columns("d", "ni"))
+    for r in q.collect():
+        a = np.reshape(np.array(r["d"], np.float32), (ni, nj), order="F")
+        for name, arg in (("min_pos", np.argmin), ("max_pos", np.argmax)):
+            i, j = np.unravel_index(arg(a), a.shape)
+            assert (r[name]["i"], r[name]["j"]) == (i + 1, j + 1), name
+        assert (math.isnan(r["min"]) and np.isnan(a).any()) \
+            or r["min"] == float(np.min(a))
+
+    plan = q._jdf.queryExecution().optimizedPlan().toString()
+    keyed = []
+    for m in re.finditer(r"transform\(d#\d+, lambdafunction\(", plan):
+        depth, k = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[k], 0)
+            k += 1
+        if "lambda p0" in plan[m.end():k]:
+            keyed.append(plan[m.end():k])
+    assert len(keyed) == 2, plan
+    for body in keyed:
+        assert not re.search(r"array_(min|max)\(d#", body), body
+
+
 def test_voir_sorted(records):
     rows = voir(records).collect()
     assert rows == sorted(rows, key=lambda r: (r.nomvar, -r.level))

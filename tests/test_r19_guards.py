@@ -123,3 +123,31 @@ def test_schema_cache_keys_on_mtime(tmp_path, spark):
     os.utime(p, ns=(os.stat(p).st_mtime_ns + 10**9,) * 2)
     df2 = e._load(spark, str(tmp_path), "widgets")
     assert df2.schema.fieldNames() == ["b", "c"]
+
+
+def test_schema_cache_rereads_a_part_file_rewritten_in_place(tmp_path, spark):
+    """A part file rewritten in place, under an unchanged directory
+    mtime, re-infers; the cache keeps one entry per path."""
+    import os
+    import shutil
+
+    import __spark_entry__ as e
+
+    p = tmp_path / "gadgets.parquet"
+    spark.createDataFrame([(1,)], "a long").coalesce(1).write.parquet(str(p))
+    df1 = e._load(spark, str(tmp_path), "gadgets")
+    assert df1.schema.fieldNames() == ["a"]
+
+    other = tmp_path / "other.parquet"
+    spark.createDataFrame([(1, 2)], "b long, c long").coalesce(1) \
+        .write.parquet(str(other))
+    [part] = [f for f in os.listdir(p) if f.endswith(".parquet")]
+    [new] = [f for f in os.listdir(other) if f.endswith(".parquet")]
+    dir_times = os.stat(p).st_atime_ns, os.stat(p).st_mtime_ns
+    shutil.copyfile(other / new, p / part)
+    shutil.copyfile(other / f".{new}.crc", p / f".{part}.crc")
+    os.utime(p, ns=dir_times)
+    df2 = e._load(spark, str(tmp_path), "gadgets")
+    assert df2.schema.fieldNames() == ["b", "c"]
+    assert sorted(df2.collect()) == [(1, 2)]
+    assert [k for k in e._SCHEMA_CACHE if str(p) in str(k)] == [str(p)]
