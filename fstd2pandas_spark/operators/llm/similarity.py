@@ -468,7 +468,9 @@ def lloyd_refine(emb: DataFrame, n_cells: int, dim: int,
         agg = assigned.sparkSession.sql(
             f"select _cell, count(*) as _n, {sums} from {{a}}"
             " group by _cell", a=assigned)
-        rows = {int(r["_cell"]): r for r in agg.collect()}
+        collected = agg.collect()
+        assert len(collected) <= n_cells, (len(collected), n_cells)
+        rows = {int(r["_cell"]): r for r in collected}
         nxt = []
         for c in range(n_cells):
             r = rows.get(c)
@@ -761,7 +763,9 @@ def pq_train(emb: DataFrame, m: int = 8, ksub: int = 16, dim: int = 64,
                       from (select posexplode(_codes) as (sub, code), _v
                             from {{c}}))
                 group by sub, code""", c=coded)
-        rows = {(int(r["sub"]), int(r["code"])): r for r in agg.collect()}
+        collected = agg.collect()
+        assert len(collected) <= m * ksub, (len(collected), m, ksub)
+        rows = {(int(r["sub"]), int(r["code"])): r for r in collected}
         codebook = [
             [([float(rows[(sub, c)][f"_s{j}"])
                / (rows[(sub, c)]["_n"] * _LLOYD_Q)

@@ -4,9 +4,12 @@ Local mode is for correctness testing only; the configs are chosen so the
 same code scales to a multi-executor cluster (AQE, adaptive coalescing,
 Arrow transfers, UTC timestamps).
 
-Executor Python workers start through
-:mod:`fstd2pandas_spark.worker_daemon`, which stops pyspark re-reading
-its own zip archive at the start of every task on CPython < 3.12.
+Before the JVM starts, :func:`get_spark` puts the directory of
+:mod:`fstd2pandas_spark._pyhook.sitecustomize` first on ``PYTHONPATH``.
+Every Python process Spark starts (planner runners, the worker daemon
+and its workers, non-daemon workers) then runs that hook at interpreter
+start, which stops pyspark re-reading its own zip archive at the start
+of every task and planner call on CPython < 3.12.
 """
 
 from __future__ import annotations
@@ -39,21 +42,15 @@ def per_spark_context(build):
     return get
 
 
-def _workers_import_package() -> bool:
-    """True when a Python worker started from this process's environment
-    imports this copy of the package: its parent directory is on
-    ``PYTHONPATH`` or is the working directory (``python -m`` puts it on
-    ``sys.path``), or the package is installed in site-packages. A
-    package reachable only through the driver's own ``sys.path`` edits
-    would make the worker daemon fail to start, so pyspark's default
-    daemon is kept then."""
-    import site
-
-    pkg = os.path.dirname(os.path.abspath(__file__))
-    dirs = os.environ.get("PYTHONPATH", "").split(os.pathsep)
-    dirs += [os.getcwd(), *site.getsitepackages(), site.getusersitepackages()]
-    return any(d and os.path.realpath(os.path.join(d, "fstd2pandas_spark"))
-               == os.path.realpath(pkg) for d in dirs)
+def _put_hook_on_pythonpath() -> None:
+    """Put the ``_pyhook`` directory first on ``PYTHONPATH`` (once): the JVM
+    inherits this process's environment and passes the path on to every
+    Python process it starts. It reaches only a JVM started after it."""
+    hook = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "_pyhook")
+    path = os.environ.get("PYTHONPATH", "")
+    if hook not in path.split(os.pathsep):
+        os.environ["PYTHONPATH"] = hook + (os.pathsep + path if path else "")
 
 
 def get_spark(
@@ -67,6 +64,7 @@ def get_spark(
     Defaults honor ``SPARK_GRAFT_CPUS`` for local parallelism. On a real
     cluster, pass ``master=None`` and let spark-submit decide.
     """
+    _put_hook_on_pythonpath()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
         master = f"local[{cpus}]"
@@ -88,11 +86,6 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.python.filterPushdown.enabled", "true")
     )
-    if _workers_import_package():
-        # static: the module Spark runs (``python -m``) to fork executor
-        # Python workers
-        builder = builder.config("spark.python.daemon.module",
-                                 "fstd2pandas_spark.worker_daemon")
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -597,7 +597,9 @@ def verify_record_keys(f, header: RecordHeader) -> None:
     header's byte offset.  Raises ``ValueError`` on mismatch or
     truncation; returns None when the copies agree.
     """
-    verify_record_keys_batch(f, [header])
+    _verify_key_blocks(
+        f, np.array([header.offset], dtype="int64"),
+        {k: np.array([getattr(header, k)]) for k in _VERIFIED_FIELDS})
 
 
 _VERIFIED_FIELDS = ("nomvar", "typvar", "etiket", "grtyp", "ni", "nj",
@@ -605,33 +607,16 @@ _VERIFIED_FIELDS = ("nomvar", "typvar", "etiket", "grtyp", "ni", "nj",
                     "nbits", "ig1", "ig2", "ig3", "ig4", "datev")
 
 
-def verify_record_keys_batch(f, headers: "list[RecordHeader]") -> None:
-    """Vectorized :func:`verify_record_keys` over many records — the
-    scan-path shape (round 17): per-record verification runs
-    ``unpack_dir_entries`` at batch size 1 (~276 µs/record measured —
-    a 100x tax over the raw payload read, ~16 s on a 60k-record file),
-    while ONE unpack over the stacked key blocks costs ~3 µs/record.
-    The file reads stay per-record (adjacent to the payload reads the
-    caller is about to do); only the decode+compare is batched."""
-    if not headers:
-        return
-    expected = {
-        k: (np.array([getattr(h, k) for h in headers])
-            if isinstance(getattr(headers[0], k), str)
-            else np.fromiter((getattr(h, k) for h in headers),
-                             dtype="int64", count=len(headers)))
-        for k in _VERIFIED_FIELDS
-    }
-    _verify_key_blocks(
-        f, np.fromiter((h.offset for h in headers), dtype="int64",
-                       count=len(headers)), expected)
-
-
 def verify_record_keys_cols(f, cols: "dict[str, np.ndarray]",
                             idx: np.ndarray) -> None:
-    """Columnar twin of :func:`verify_record_keys_batch` (round 18
-    scan path): verify the rows of ``cols`` selected by ``idx``
-    without boxing RecordHeaders."""
+    """Vectorized :func:`verify_record_keys` over the rows of ``cols``
+    selected by ``idx``, without boxing RecordHeaders — the scan-path
+    shape: per-record verification runs ``unpack_dir_entries`` at batch
+    size 1 (~276 µs/record measured — a 100x tax over the raw payload
+    read, ~16 s on a 60k-record file), while ONE unpack over the
+    stacked key blocks costs ~3 µs/record. The file reads stay
+    per-record (adjacent to the payload reads the caller is about to
+    do); only the decode+compare is batched."""
     if not len(idx):
         return
     _verify_key_blocks(f, cols["offset"][idx],

@@ -22,11 +22,10 @@ fails the build the moment such a name lands:
   scope, must resolve to a name the module defines — a tool or gate
   that imports a moved or deleted helper fails here, at collection
   speed, not at its next manual run,
-- every ``spark.python.*.module`` value ``session.py`` sets must name
-  an importable module with an ``if __name__ == "__main__":`` entry —
-  Spark runs it with ``python -m`` to start every executor Python
-  worker, so a rename would otherwise fail every Python task at run
-  time.
+- the interpreter-start hook (``_pyhook/sitecustomize.py``) may import
+  only standard-library modules — it runs first in every Python
+  process Spark starts, before pyspark or this package can be assumed
+  importable there, so one such import would break every Python task.
 
 The checker is itself tested against injected defects (a dangling
 name, an unused import) so a silent checker regression cannot pass.
@@ -37,9 +36,8 @@ from __future__ import annotations
 import ast
 import builtins
 import importlib
-import importlib.util
 import pathlib
-import re
+import sys
 
 import pytest
 
@@ -272,43 +270,21 @@ def unresolved_package_imports(src: str,
     return sorted(bad)
 
 
-def python_module_confs(src: str) -> "dict[str, object]":
-    """``spark.python.*.module`` key -> value of every ``.config(key,
-    value)`` call in ``src``; a value that is not a string literal maps
-    to its AST node (unverifiable, so a finding)."""
-    out: dict = {}
-    for n in ast.walk(ast.parse(src)):
-        if (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
-                and n.func.attr == "config" and len(n.args) == 2
-                and isinstance(n.args[0], ast.Constant)
-                and re.fullmatch(r"spark\.python\.[\w.]+\.module",
-                                 str(n.args[0].value))):
-            v = n.args[1]
-            out[n.args[0].value] = (v.value if isinstance(v, ast.Constant)
-                                    else v)
-    return out
-
-
-def runnable_module_problem(name: object) -> "str | None":
-    """Why ``python -m name`` cannot start, or None: not a string, not
-    importable, or no ``if __name__ == "__main__":`` block."""
-    if not isinstance(name, str):
-        return f"not a string literal: {ast.dump(name)}"
-    try:
-        spec = importlib.util.find_spec(name)
-    except ModuleNotFoundError:  # a missing parent package
-        spec = None
-    if spec is None or not spec.origin or not spec.origin.endswith(".py"):
-        return f"{name}: no importable source module"
-    tree = ast.parse(pathlib.Path(spec.origin).read_text())
-    for n in tree.body:
-        if (isinstance(n, ast.If) and isinstance(n.test, ast.Compare)
-                and isinstance(n.test.left, ast.Name)
-                and n.test.left.id == "__name__"
-                and any(isinstance(c, ast.Constant) and c.value == "__main__"
-                        for c in n.test.comparators)):
-            return None
-    return f"{name}: no `if __name__ == \"__main__\":` entry"
+def nonstdlib_imports(src: str, filename: str = "<src>") -> "list[str]":
+    """Imports, at any scope, of anything outside the standard library:
+    a third-party or package module, or a relative import."""
+    bad = []
+    for n in ast.walk(ast.parse(src, filename)):
+        if isinstance(n, ast.Import):
+            names = [a.name for a in n.names]
+        elif isinstance(n, ast.ImportFrom):
+            names = ["." * n.level + (n.module
+                                      or ", ".join(a.name for a in n.names))]
+        else:
+            continue
+        bad += [f"{name} (line {n.lineno})" for name in names
+                if name.split(".")[0] not in sys.stdlib_module_names]
+    return sorted(bad)
 
 
 def _py_files() -> "list[pathlib.Path]":
@@ -371,11 +347,9 @@ def test_outside_callers_import_defined_names():
         "package no longer defines:\n" + "\n".join(problems))
 
 
-def test_session_worker_modules_are_runnable():
-    confs = python_module_confs((PKG / "session.py").read_text())
-    assert "spark.python.daemon.module" in confs, confs
-    problems = {k: runnable_module_problem(v) for k, v in confs.items()}
-    assert not any(problems.values()), problems
+def test_interpreter_hook_imports_only_the_stdlib():
+    hook = PKG / "_pyhook" / "sitecustomize.py"
+    assert nonstdlib_imports(hook.read_text(), str(hook)) == []
 
 
 # ---- the checker is itself checked against injected defects ----
@@ -481,24 +455,21 @@ def test_checker_clean_on_tricky_scoping():
     assert unused_imports(_CLEAN_TRICKY) == []
 
 
-_INJECTED_MODULE_CONFS = '''
-b = (builder.config("spark.python.daemon.module", "fstd2pandas_spark.no_such")
-     .config("spark.python.worker.module", "fstd2pandas_spark.schema")
-     .config("spark.python.use.daemon", "true"))
-b.config("spark.python.profile.module", NAME)
+_INJECTED_HOOK_IMPORTS = '''
+import os
+import os.path
+from importlib import machinery
+from . import session
+import pyspark.daemon
+
+
+def install():
+    from fstd2pandas_spark.session import get_spark
+    return get_spark
 '''
 
 
-def test_checker_catches_unrunnable_worker_modules():
-    confs = python_module_confs(_INJECTED_MODULE_CONFS)
-    assert sorted(confs) == ["spark.python.daemon.module",
-                             "spark.python.profile.module",
-                             "spark.python.worker.module"]
-    assert "no importable source" in runnable_module_problem(
-        confs["spark.python.daemon.module"])
-    assert "__main__" in runnable_module_problem(
-        confs["spark.python.worker.module"])
-    assert "not a string literal" in runnable_module_problem(
-        confs["spark.python.profile.module"])
-    assert "no importable source" in runnable_module_problem("no_pkg.daemon")
-    assert runnable_module_problem("fstd2pandas_spark.worker_daemon") is None
+def test_checker_catches_nonstdlib_hook_imports():
+    assert nonstdlib_imports(_INJECTED_HOOK_IMPORTS) == [
+        ".session (line 5)", "fstd2pandas_spark.session (line 10)",
+        "pyspark.daemon (line 6)"]

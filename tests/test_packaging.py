@@ -13,7 +13,7 @@ import tarfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _SUBPKGS = ("operators", "operators/llm", "sources", "functions",
-            "plans", "streaming", "lookups")
+            "plans", "streaming", "lookups", "_pyhook")
 _CSVS = ("stdvar.csv", "units.csv", "leveltype.csv",
          "thermo_constants.csv", "verticalcoordinatetypes.csv",
          "stationsfb.csv")
@@ -35,6 +35,7 @@ def test_sdist_builds_and_imports(tmp_path):
     top = name[: -len(".tar.gz")]
     for sub in _SUBPKGS:
         assert f"{top}/fstd2pandas_spark/{sub}/__init__.py" in members, sub
+    assert f"{top}/fstd2pandas_spark/_pyhook/sitecustomize.py" in members
     for csv in _CSVS:
         assert f"{top}/fstd2pandas_spark/lookups/{csv}" in members, csv
     assert f"{top}/pyproject.toml" in members

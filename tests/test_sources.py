@@ -1338,10 +1338,6 @@ def test_split_large_files_into_multiple_tasks(registered, records,
 # option("pushdown", "false") escape hatch.
 
 
-class _ToyPushReader:
-    pass  # placeholder so the datasource classes below stay local
-
-
 def _toy_datasource():
     from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                         EqualTo, InputPartition)

@@ -1,11 +1,13 @@
-"""The executor Python-worker daemon and the per-SparkContext Column memo.
+"""The interpreter-start hook for Spark's Python processes and the
+per-SparkContext Column memo.
 
-- ``worker_daemon``'s lazy ``zipimporter.invalidate_caches`` skips the
+- the hook's lazy ``zipimporter.invalidate_caches`` skips the
   zip-directory re-read while an archive is unchanged, and re-reads
   once it is rewritten (a new module in it then imports);
-- the test session's Python tasks run under it;
-- ``get_spark`` keeps pyspark's own daemon when a worker could not
-  import the package;
+- a data source's planner call (``partitions()``, run in a planner
+  runner) and its ``read()`` (run in a worker forked by pyspark's
+  daemon) both run with it installed;
+- the hook chains to the ``sitecustomize`` it shadows, once;
 - ``per_spark_context`` (the decode cascade's and the funnel fold's
   memo) keys on the live SparkContext by identity: one build per
   context, a rebuild for a new one;
@@ -17,6 +19,7 @@ from __future__ import annotations
 
 import importlib
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -24,7 +27,8 @@ import zipimport
 import pytest
 from pyspark import SparkContext
 
-from fstd2pandas_spark import session, worker_daemon
+from fstd2pandas_spark import session
+from fstd2pandas_spark._pyhook import sitecustomize as hook
 from fstd2pandas_spark.functions import meta
 
 
@@ -36,7 +40,7 @@ def _write_zip(path, modules: "dict[str, str]") -> None:
 
 @pytest.mark.skipif(sys.version_info >= (3, 12),
                     reason="CPython 3.12+ invalidates zip caches lazily; "
-                           "the daemon only delegates there")
+                           "the hook installs nothing there")
 def test_lazy_invalidation_rereads_only_a_changed_archive(tmp_path,
                                                           monkeypatch):
     archive = str(tmp_path / "lazy_pkgs.zip")
@@ -53,9 +57,9 @@ def test_lazy_invalidation_rereads_only_a_changed_archive(tmp_path,
         assert importlib.import_module("lazy_mod_a").VALUE == 1
         monkeypatch.setattr(zipimport, "_read_directory",
                             lambda a: reads.append(a) or eager_read(a))
-        assert not worker_daemon.lazy_zip_invalidation_installed()
-        worker_daemon.install_lazy_zip_invalidation()
-        assert worker_daemon.lazy_zip_invalidation_installed()
+        assert not hook.lazy_zip_invalidation_installed()
+        hook.install_lazy_zip_invalidation()
+        assert hook.lazy_zip_invalidation_installed()
 
         importlib.invalidate_caches()   # first call: reads and stamps
         importlib.invalidate_caches()
@@ -72,39 +76,83 @@ def test_lazy_invalidation_rereads_only_a_changed_archive(tmp_path,
         zipimport._zip_directory_cache.pop(archive, None)
 
 
-def test_session_python_tasks_run_under_the_daemon(spark):
-    import pyarrow as pa
+def _probe_source():
+    from pyspark.sql.datasource import (DataSource, DataSourceReader,
+                                        InputPartition)
 
-    def probe(batches):
-        from fstd2pandas_spark.worker_daemon import (
-            lazy_zip_invalidation_installed)
+    class ProbeReader(DataSourceReader):
+        def partitions(self):
+            from fstd2pandas_spark._pyhook.sitecustomize import (
+                lazy_zip_invalidation_installed)
 
-        for b in batches:
-            yield pa.RecordBatch.from_pydict(
-                {"lazy": [lazy_zip_invalidation_installed()] * b.num_rows})
+            return [InputPartition(lazy_zip_invalidation_installed())] * 2
 
-    assert (spark.sparkContext.getConf().get("spark.python.daemon.module")
-            == "fstd2pandas_spark.worker_daemon")
-    rows = spark.range(4, numPartitions=2).mapInArrow(
-        probe, "lazy boolean").collect()
-    assert [r.lazy for r in rows] == [sys.version_info < (3, 12)] * 4
+        def read(self, partition):
+            from fstd2pandas_spark._pyhook.sitecustomize import (
+                lazy_zip_invalidation_installed)
+
+            yield partition.value, lazy_zip_invalidation_installed()
+
+    class Probe(DataSource):
+        @classmethod
+        def name(cls):
+            return "lazy_zip_probe"
+
+        def schema(self):
+            return "planner boolean, worker boolean"
+
+        def reader(self, schema):
+            return ProbeReader()
+
+    return Probe
 
 
-def test_daemon_kept_off_when_workers_cannot_import_the_package(
-        tmp_path, monkeypatch):
-    import site
+@pytest.mark.skipif(sys.version_info >= (3, 12),
+                    reason="CPython 3.12+ invalidates zip caches lazily; "
+                           "the hook installs nothing there")
+def test_planner_and_worker_processes_run_the_hook(spark):
+    spark.dataSource.register(_probe_source())
+    rows = spark.read.format("lazy_zip_probe").load().collect()
+    assert [(r.planner, r.worker) for r in rows] == [(True, True)] * 2
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
-    monkeypatch.setattr(site, "getsitepackages", lambda: [])
-    monkeypatch.setattr(site, "getusersitepackages", lambda: "")
-    monkeypatch.chdir(tmp_path)
-    monkeypatch.setenv("PYTHONPATH", str(tmp_path))
-    assert not session._workers_import_package()
-    monkeypatch.setenv("PYTHONPATH", os.pathsep.join([str(tmp_path), root]))
-    assert session._workers_import_package()
-    monkeypatch.delenv("PYTHONPATH")
-    monkeypatch.chdir(root)
-    assert session._workers_import_package()
+
+def test_hook_chains_the_sitecustomize_it_shadows_once(tmp_path):
+    hook_dir = os.path.dirname(os.path.abspath(hook.__file__))
+    (tmp_path / "alias").symlink_to(hook_dir)
+    other = tmp_path / "other"
+    other.mkdir()
+    # the marker: whether the invalidation was installed, and how many
+    # hook module bodies are running below this one
+    (other / "sitecustomize.py").write_text(
+        "import os, sys, zipimport\n"
+        "f, hooks = sys._getframe(), 0\n"
+        "while f:\n"
+        "    hooks += (f.f_code.co_name == '<module>' and os.path.realpath(\n"
+        "        f.f_code.co_filename) == os.environ['HOOK_FILE'])\n"
+        "    f = f.f_back\n"
+        "lazy = getattr(zipimport.zipimporter.invalidate_caches,\n"
+        "               '_lazy_zip_invalidation', False)\n"
+        "with open(os.environ['HOOK_MARKER'], 'a') as out:\n"
+        "    out.write(f'{lazy} {hooks}\\n')\n")
+    marker = tmp_path / "marker"
+    # the hook's directory twice (once through a symlink): both skipped
+    # when it looks for the next sitecustomize
+    path = os.pathsep.join([hook_dir, str(tmp_path / "alias"), str(other)])
+    r = subprocess.run(
+        [sys.executable, "-c",
+         "import sys, zipimport; print(sys.modules['sitecustomize'].__file__);"
+         "print(getattr(zipimport.zipimporter.invalidate_caches,"
+         " '_lazy_zip_invalidation', False))"],
+        cwd=str(tmp_path), capture_output=True, text=True,
+        env={**os.environ, "PYTHONPATH": path, "HOOK_MARKER": str(marker),
+             "HOOK_FILE": os.path.realpath(hook.__file__)})
+    assert r.returncode == 0 and not r.stderr, r.stderr[-800:]
+    lazy = str(sys.version_info < (3, 12))
+    # the chained module stands in sys.modules, as it would unshadowed
+    assert r.stdout.split() == [str(other / "sitecustomize.py"), lazy]
+    # it ran once, after the hook had installed the invalidation, below
+    # one run of the hook
+    assert marker.read_text().splitlines() == [f"{lazy} 1"]
 
 
 def test_per_spark_context_memo_keys_on_context_identity(monkeypatch):
