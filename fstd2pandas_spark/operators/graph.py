@@ -2,11 +2,14 @@
 
 Spark-first shape (the Pregel-lite idiom): the graph lives as an edge
 DataFrame, one iteration is ONE shuffle (contributions grouped by
-destination) plus a single-row dangling-mass aggregate, and
-``localCheckpoint`` cuts the lineage each round so ten iterations cost
-ten shuffles, not an exponentially re-derived plan. The (src, dst,
-out-degree) build side is checkpointed once and reused by every
-iteration.
+destination), and ``localCheckpoint`` cuts the lineage each round so
+ten iterations cost ten shuffles, not an exponentially re-derived plan.
+The (src, dst, out-degree) build side is checkpointed once and reused
+by every iteration. The driver scalars the loop needs — the node count,
+the dangling count, each iteration's dangling rank mass — are
+observations on the checkpoints' own jobs
+(:func:`~fstd2pandas_spark.operators.iterative.checkpoint_observed`),
+so no iteration runs a separate action for them.
 
 Determinism contract (what makes an ITERATIVE float algorithm
 oracle-gatable): ranks live as INTEGER units (``scale`` = 1e9 by
@@ -20,8 +23,8 @@ any float implementation; convergence behavior is the same.
 
 At 100 TB: the per-iteration shuffle is keyed by ``dst`` — skew on a
 celebrity node is an AQE skew-join case, and the dangling aggregate is
-a 1-row driver scalar per iteration (bounded by construction, the same
-contract as the sketch parameter checks).
+one in-plan driver scalar per iteration (bounded by construction, the
+same contract as the sketch parameter checks).
 
 Exchange count per round — MEASURED, not asserted (plan-locked in
 tests/test_plans.py): the checkpointed sides are co-partitioned (edges
@@ -58,7 +61,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fstd2pandas_spark.operators.iterative import (
-    make_checkpointer, release_checkpoint as _release_checkpoint,
+    checkpoint_observed, make_checkpointer,
+    release_checkpoint as _release_checkpoint,
 )
 
 
@@ -150,13 +154,16 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # fix): the former `dangling.join(ranks, "node")` re-shuffled two
     # checkpointed V-row tables per iteration (LogicalRDDs surface no
     # partitioning under AQE) just to sum a known-static subset
-    nodes = _ckpt(_copart(
+    # the node count and the dangling count are observed on the
+    # checkpoint's own job (no count() action)
+    nodes, seen = checkpoint_observed(_ckpt, _copart(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
         .join(outdeg.withColumnRenamed("src", "node"), "node", "left")
-        .select("node", F.col("deg").isNull().alias("_dang")), "node"))
-    n = nodes.count()
+        .select("node", F.col("deg").isNull().alias("_dang")), "node"),
+        n=F.count(F.lit(1)), n_dang=F.count(F.when(F.col("_dang"), 1)))
+    n = seen["n"]
     if n == 0:
         return nodes.select("node").withColumn("r",
                                                F.lit(0).cast("long"))
@@ -175,18 +182,21 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     ranks = nodes.select("node",
                          F.lit(scale // n).cast("long").alias("r"),
                          "_dang")
+    # dangling mass: ONE scalar per iteration (the redistribute-
+    # uniformly constant). Uniform start ranks make the first one
+    # n_dang * (scale div n); each later one is summed over the rank
+    # snapshot's own `_dang` flag, observed on that snapshot's
+    # checkpoint job — no join and no extra action
+    d_total = seen["n_dang"] * (scale // n)
     prev = None
     try:
         for _ in range(iters):
-            # dangling mass: ONE scalar per iteration (bounded driver
-            # round-trip — the redistribute-uniformly constant), read
-            # off the rank snapshot's own `_dang` flag — no join
-            d_total = (ranks.filter(F.col("_dang"))
-                       .agg(F.sum("r").alias("s")).first()["s"]) or 0
-            ranks = _next_ranks(nodes, ed, ranks, teleport,
-                                damping_num, damping_den,
-                                int(d_total) // n)
-            ranks = _ckpt(ranks)
+            ranks, seen = checkpoint_observed(
+                _ckpt,
+                _next_ranks(nodes, ed, ranks, teleport, damping_num,
+                            damping_den, d_total // n),
+                d=F.sum(F.when(F.col("_dang"), F.col("r"))))
+            d_total = seen["d"] or 0
             # checkpoints here are eager, so the superseded snapshot
             # can be released immediately — without this, k iterations
             # pin k full N-row rank snapshots in block-manager storage

@@ -2,9 +2,9 @@
 
 Every iterative operator in this engine (PageRank in
 :mod:`~fstd2pandas_spark.operators.graph`, label propagation in
-:mod:`~fstd2pandas_spark.operators.llm.cluster`) has the same two
-cluster-hardening needs, so they live here ONCE — a fix to either can
-never silently miss one of the loops (the ``_salted_topk`` precedent):
+:mod:`~fstd2pandas_spark.operators.llm.cluster`) has the same three
+needs, so they live here ONCE — a fix to any of them can never silently
+miss one of the loops (the ``_salted_topk`` precedent):
 
 1. **Superseded-snapshot release** (:func:`release_checkpoint`): a
    per-round eager ``localCheckpoint`` truncates lineage, but without
@@ -21,6 +21,12 @@ never silently miss one of the loops (the ``_salted_topk`` precedent):
    write+read of the state per round; superseded reliable files are
    ContextCleaner's job (``spark.cleaner.referenceTracking.
    cleanCheckpoints=true``), not ours.
+3. **In-plan loop scalars** (:func:`checkpoint_observed`): each round
+   needs a few driver-side numbers about the state it just built (the
+   labels that changed, the node count, the dangling rank mass). A
+   ``DataFrame.observe`` on the frame being checkpointed computes them
+   in the checkpoint's own job, so no round pays a separate
+   ``count()``/``first()`` action that re-reads the snapshot.
 """
 
 from __future__ import annotations
@@ -28,7 +34,7 @@ from __future__ import annotations
 import logging
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 _log = logging.getLogger(__name__)
 _release_warned = False
@@ -76,3 +82,18 @@ def make_checkpointer(spark: SparkSession,
         def _ckpt(df: DataFrame) -> DataFrame:
             return df.localCheckpoint(eager=True)
     return _ckpt
+
+
+def checkpoint_observed(ckpt: "Callable[[DataFrame], DataFrame]",
+                        df: DataFrame, **metrics: Column,
+                        ) -> "tuple[DataFrame, dict]":
+    """``ckpt(df)`` plus the named aggregate ``metrics`` over ``df``'s
+    rows, read off the checkpoint's own job (``DataFrame.observe``): no
+    extra action runs. ``ckpt`` must be eager (every
+    :func:`make_checkpointer` result is), so the metrics are final when
+    this returns; the snapshot's plan is the bare checkpoint, so later
+    reads of it never re-count."""
+    obs = Observation()
+    snap = ckpt(df.observe(
+        obs, *[col.alias(name) for name, col in metrics.items()]))
+    return snap, obs.get

@@ -7,13 +7,25 @@ node takes the minimum label in its closed neighbourhood — converges in
 O(graph diameter) rounds; near-dup graphs are near-cliques per
 duplicate family, so 2-3 rounds typically suffice.
 
-Spark shape per round: one equi-join (edges x labels) + one groupBy min
-— both shuffle on the node id and co-partition after the first round.
-Lineage is truncated with an eager checkpoint every round (the standard
-iterative-algorithm idiom: without it the plan doubles per iteration),
-and convergence is detected with a bounded count action. The checkpoint
-machinery — superseded-snapshot release so k rounds never pin k V-row
-label snapshots, and the ``checkpoint_dir`` RELIABLE option for
+Spark shape (Pregel-style, one shuffle per round):
+
+- **Build.** The pairs are symmetrized and ONE ``groupBy(node)`` folds
+  each node's sorted, distinct neighbour list together with round 1's
+  label, ``least(node, min(neighbours))``. That state is checkpointed
+  once, so the pair plan upstream runs once.
+- **Each later round** (:func:`_propagate`). Every node sends its label
+  to each neighbour (``explode``) and keeps its own row (label and
+  neighbour list); one ``groupBy(node)`` takes the min label and
+  carries the list and the previous label along. That is one hash
+  exchange and no join (plan-locked in tests/test_plans.py).
+- **Convergence.** The changed-label count is an observation on the
+  round's eager checkpoint, so it costs no job of its own: a round is
+  the checkpoint's jobs only (two under AQE, the map stage and the
+  result stage).
+
+The checkpoint machinery — the per-round lineage cut, superseded-
+snapshot release so k rounds never pin k state snapshots, the in-plan
+changed count, and the ``checkpoint_dir`` RELIABLE option for
 preemptible fleets — is the shared
 :mod:`~fstd2pandas_spark.operators.iterative` home, one definition with
 PageRank so a hardening fix can never miss one of the two loops.
@@ -29,7 +41,7 @@ from pyspark.sql import functions as F
 _log = logging.getLogger(__name__)
 
 from fstd2pandas_spark.operators.iterative import (
-    make_checkpointer, release_checkpoint,
+    checkpoint_observed, make_checkpointer, release_checkpoint,
 )
 
 
@@ -37,16 +49,59 @@ class ConvergenceError(RuntimeError):
     """Label propagation needed more rounds than the caller allowed."""
 
 
+def _build(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """Round 1 as the propagation state (node, _nbrs, component,
+    _prev): one row per node, including the NULL endpoint if any pair
+    has one. That row's label stays NULL (``least`` skips NULLs, so the
+    NULL node must not see its neighbours' min); no neighbour list
+    holds it (``collect_set`` skips NULLs) and every ``min`` skips the
+    NULL label it sends, so it never joins a component."""
+    fwd = pairs.select(F.col(id_a).alias("node"), F.col(id_b).alias("_nbr"))
+    sym = fwd.unionByName(
+        fwd.select(F.col("_nbr").alias("node"), F.col("node").alias("_nbr")))
+    # collect_set bound: the node's degree — the symmetrized pair table
+    # already holds those rows, so the list adds no row the input lacks
+    return (
+        sym.groupBy("node")
+        .agg(F.sort_array(F.collect_set("_nbr")).alias("_nbrs"),
+             F.min("_nbr").alias("_nmin"))
+        .select("node", "_nbrs",
+                F.least(F.col("node"),
+                        F.when(F.col("node").isNotNull(), F.col("_nmin")))
+                .alias("component"),
+                F.col("node").alias("_prev"))
+    )
+
+
+def _propagate(state: DataFrame) -> DataFrame:
+    """One round over a checkpointed state (node, _nbrs, component,
+    _prev), same columns out: every node messages its label to each
+    neighbour and keeps its own row, one ``groupBy(node)`` takes the
+    min. Split out so tests/test_plans.py can plan-lock the
+    round's exchange count against exactly the production plan."""
+    comp = F.col("component")
+    sent = state.select(F.explode("_nbrs").alias("node"),
+                        comp.alias("_m"))
+    kept = state.select("node", comp.alias("_m"), "_nbrs",
+                        comp.alias("_own"))
+    return (
+        kept.unionByName(sent, allowMissingColumns=True)
+        .groupBy("node")
+        .agg(F.flatten(F.collect_list("_nbrs")).alias("_nbrs"),
+             F.min("_m").alias("component"),
+             F.min("_own").alias("_prev"))
+    )
+
+
 def neardup_components(pairs: DataFrame, id_a: str = "doc_a",
                        id_b: str = "doc_b", max_iter: int = 20,
-                       checkpoint: bool = True,
                        require_convergence_within: "int | None" = None,
                        checkpoint_dir: "str | None" = None,
                        ) -> DataFrame:
     """(node, component) for every node in ``pairs``; component = min
-    node id reachable through the pair graph. ``max_iter`` bounds the
-    rounds (diameter guard); iteration stops early at the first round
-    that changes no label.
+    node id reachable through the pair graph. ``max_iter`` (>= 1)
+    bounds the rounds (diameter guard); iteration stops early at the
+    first round that changes no label.
 
     ``require_convergence_within=N`` raises :class:`ConvergenceError` if
     labels are still changing after N rounds — used by callers whose
@@ -54,82 +109,37 @@ def neardup_components(pairs: DataFrame, id_a: str = "doc_a",
     so a graph-shape change fails loudly instead of silently diverging
     from the pinned expectation.
 
-    ``checkpoint_dir``: per-round label state uses RELIABLE checkpoints
-    under this directory (survives executor loss — the preemptible-
-    fleet mode); the default eager ``localCheckpoint`` is faster but
-    not fault-tolerant. Each round's superseded local snapshot is
-    RELEASED as soon as the convergence check has read it, so a k-round
-    propagation holds at most two label snapshots in block-manager
-    storage, never k (shared machinery: operators/iterative.py)."""
-    if checkpoint_dir is not None and not checkpoint:
-        # the caller asked for fault-tolerant reliable checkpoints AND
-        # for no checkpointing at all — honoring either half silently
-        # betrays the other (and would mutate the context's global
-        # checkpoint dir for nothing); refuse the contradiction
-        raise ValueError(
-            "checkpoint_dir requires checkpoint=True — with "
-            "checkpoint=False nothing is ever checkpointed, so the "
-            "reliable fault-tolerant mode the directory requests "
-            "cannot exist")
+    ``checkpoint_dir``: per-round state uses RELIABLE checkpoints under
+    this directory (survives executor loss — the preemptible-fleet
+    mode); the default eager ``localCheckpoint`` is faster but not
+    fault-tolerant. Each round's superseded local snapshot is RELEASED
+    as soon as the next one is built, so a k-round propagation holds at
+    most two state snapshots in block-manager storage, never k (shared
+    machinery: operators/iterative.py). The returned frame is a
+    projection over the last snapshot, which also holds the neighbour
+    lists (one entry per symmetrized pair) until the caller drops it."""
+    if max_iter < 1:
+        raise ValueError("max_iter must be >= 1")
     _ckpt = make_checkpointer(pairs.sparkSession, checkpoint_dir)
-    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    labels = edges.select(F.col("src").alias("node")).distinct() \
-                  .withColumn("component", F.col("node"))
-    #: `snap` is the CHECKPOINTED frame backing the current `labels`
-    #: (release_checkpoint needs the LogicalRDD root, and from r18
-    #: `labels` may be a projection over it)
+    changed = F.count(F.when(F.col("component") != F.col("_prev"), 1))
     snap = None
-    if checkpoint:
-        edges = _ckpt(edges)
-        labels = snap = _ckpt(labels)
-    # MERGE hints throughout: the label and edge tables are both
-    # pair-graph-scale (millions of rows on a real corpus), so a
-    # stats-driven broadcast of either side is a scale hazard
     changing_rounds = 0
     converged = False
     try:
         for _ in range(max_iter):
-            neigh = (
-                edges.hint("merge").join(labels, edges.dst == labels.node)
-                .groupBy("src").agg(F.min("component").alias("_nmin"))
-            )
-            # the round's OLD component rides along as `_prev` so the
-            # convergence check below is a plain filter over the
-            # checkpointed frame (r18, guide §2.4): the former
-            # nxt-join-labels-on-node check re-shuffled BOTH label
-            # snapshots every round (checkpointed RDDs surface no
-            # partitioning to the planner) and cost a full extra job
-            nxt = (
-                labels.hint("merge")
-                .join(neigh, labels.node == neigh.src, "left")
-                .select(
-                    "node",
-                    F.least(F.col("component"),
-                            F.coalesce(F.col("_nmin"), F.col("component")))
-                    .alias("component"),
-                    F.col("component").alias("_prev"),
-                )
-            )
-            if checkpoint:
-                nxt = _ckpt(nxt)
-            changed = (
-                nxt.filter(F.col("component") != F.col("_prev"))
-                .limit(1).count()
-            )
-            prev_snap = snap
-            snap = nxt if checkpoint else None
-            labels = nxt.select("node", "component")
-            # nxt is materialized (checkpoints are eager), so the
-            # previous round's snapshot has no reader left — release it
-            # now so k rounds never pin k label snapshots;
-            # reliable-checkpoint files are ContextCleaner's job instead
-            if (checkpoint and checkpoint_dir is None
-                    and prev_snap is not None):
+            nxt, seen = checkpoint_observed(
+                _ckpt,
+                _build(pairs, id_a, id_b) if snap is None
+                else _propagate(snap),
+                changed=changed)
+            prev_snap, snap = snap, nxt
+            # checkpoints are eager, so the previous round's snapshot
+            # has no reader left — release it now so k rounds never pin
+            # k state snapshots; reliable-checkpoint files are
+            # ContextCleaner's job instead
+            if checkpoint_dir is None and prev_snap is not None:
                 release_checkpoint(prev_snap)
-            if changed == 0:
+            if seen["changed"] == 0:
                 converged = True
                 break
             changing_rounds += 1
@@ -161,15 +171,17 @@ def neardup_components(pairs: DataFrame, id_a: str = "doc_a",
                 max_iter)
             converged = True  # keep the returned snapshot un-released
     finally:
-        # the raise paths must not leak storage either: the edge
-        # snapshot has no reader past this function, and on failure the
-        # last label snapshot is unreachable to the caller too — a
-        # retried call would otherwise pin graph-scale state per attempt
-        if checkpoint and checkpoint_dir is None:
-            release_checkpoint(edges)
-            if not converged and snap is not None:
-                release_checkpoint(snap)
-    return labels
+        # the raise paths must not leak storage either: on failure the
+        # last snapshot is unreachable to the caller — a retried call
+        # would otherwise pin graph-scale state per attempt
+        if checkpoint_dir is None and not converged and snap is not None:
+            release_checkpoint(snap)
+    # min() types the label nullable; coalescing with the node gives it
+    # back the id column's nullability (only the NULL node has a NULL
+    # label, and coalesce keeps that NULL)
+    return snap.select("node",
+                       F.coalesce(F.col("component"), F.col("node"))
+                       .alias("component"))
 
 
 def canonical_docs(pairs: DataFrame, docs: DataFrame,

@@ -798,10 +798,118 @@ def test_neardup_reliable_checkpoint_same_components(spark, tmp_path):
     found = [f for _root, _d, files in os.walk(ckdir) for f in files]
     assert found, "no reliable checkpoint files written"
 
-    # checkpoint_dir with checkpoint=False is a contradiction (the
-    # reliable mode cannot exist without checkpointing) — refuse
-    with pytest.raises(ValueError, match="checkpoint=True"):
-        neardup_components(chain, checkpoint=False, checkpoint_dir=ckdir)
+
+def _union_find_components(edges):
+    """Driver-side oracle: node -> min node id of its component, over
+    the non-NULL endpoints of ``edges``."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        for x in (a, b):
+            if x is not None:
+                find(x)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+@pytest.mark.parametrize("case", [
+    "null_endpoints", "self_loop_dup_reversed", "int", "bigint", "string",
+    "shuffled_chain", "near_clique"])
+def test_neardup_components_equivalence(spark, case):
+    """Rows, schema and changing-round count on the corner graphs, each
+    checked against a union-find oracle AND against the rows the
+    join-based propagation returned (pinned below): a NULL endpoint is
+    one (NULL, NULL) row that never joins a component, a self-loop is
+    its own component, duplicate and reversed pairs change nothing,
+    and the id type passes through unchanged."""
+    import random
+
+    from fstd2pandas_spark.operators.llm.cluster import (
+        ConvergenceError, neardup_components)
+
+    rng = random.Random(11)
+    ids = list(range(100, 112))
+    rng.shuffle(ids)
+    chain = [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]
+    clique = [(a, b) for a in range(8) for b in range(a + 1, 8)
+              if (a, b) != (0, 1)] + [(20, 21)]
+    # (edges, DDL, rows the join-based loop returned, changing rounds)
+    cases = {
+        "null_endpoints": (
+            [(1, 2), (2, None), (None, 5)], "doc_a bigint, doc_b bigint",
+            {1: 1, 2: 1, 5: 5, None: None}, 1),
+        "self_loop_dup_reversed": (
+            [(7, 7), (1, 2), (2, 1), (1, 2), (3, 2), (2, 3)],
+            "doc_a int, doc_b int", {7: 7, 1: 1, 2: 1, 3: 1}, 2),
+        "int": ([(3, 1), (4, 3), (9, 8)], "doc_a int, doc_b int",
+                {1: 1, 3: 1, 4: 1, 8: 8, 9: 8}, 2),
+        "bigint": ([(2 ** 40 + 1, 2 ** 40), (5, 2 ** 40 + 1)],
+                   "doc_a bigint, doc_b bigint",
+                   {2 ** 40: 5, 2 ** 40 + 1: 5, 5: 5}, 2),
+        "string": ([("b", "a"), ("c", "b"), ("x", "y")],
+                   "doc_a string, doc_b string",
+                   {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}, 2),
+        # 100 sits third of 12 in the shuffled chain: 9 hops to the end
+        "shuffled_chain": (chain, "doc_a int, doc_b int",
+                           {n: 100 for n in ids}, 9),
+        "near_clique": (clique, "doc_a int, doc_b int",
+                        {**{n: 0 for n in range(8)}, 20: 20, 21: 20}, 2),
+    }
+    edges, ddl, pinned, rounds = cases[case]
+    pairs = spark.createDataFrame(edges, ddl)
+    out = neardup_components(pairs)
+    got = {r.node: r.component for r in out.collect()}
+    assert out.count() == len(got)   # one row per node, NULL included
+    oracle = _union_find_components(edges)
+    if any(None in e for e in edges):
+        oracle[None] = None
+    assert got == oracle == pinned
+    id_type = ddl.split(",")[0].split()[1]
+    assert out.schema.simpleString() == \
+        f"struct<node:{id_type},component:{id_type}>"
+    neardup_components(pairs, require_convergence_within=rounds).collect()
+    if rounds:
+        with pytest.raises(ConvergenceError):
+            neardup_components(pairs,
+                               require_convergence_within=rounds - 1)
+    with pytest.raises(ValueError, match="max_iter"):
+        neardup_components(pairs, max_iter=0)
+
+
+def test_neardup_components_job_budget(spark):
+    """Each propagation round is its checkpoint's jobs only (the map
+    stage and the result stage under AQE): the pair plan runs once at
+    the build and the changed-label count is observed in-plan, not
+    counted by its own action. A 5-chain takes 5 rounds (4 changing
+    plus the one that sees no change)."""
+    import time as _time
+
+    from fstd2pandas_spark.operators.llm.cluster import neardup_components
+
+    chain = spark.createDataFrame([(a, a + 1) for a in range(4)],
+                                  "doc_a int, doc_b int")
+    sc = spark.sparkContext
+    sc.setJobGroup("neardup-job-budget", "neardup_components job budget")
+    try:
+        got = {r.node: r.component
+               for r in neardup_components(chain).collect()}
+    finally:
+        sc.setJobGroup(None, None)
+    _time.sleep(0.5)   # listener-bus drain
+    jobs = list(sc.statusTracker().getJobIdsForGroup("neardup-job-budget"))
+    assert got == {n: 0 for n in range(5)}
+    rounds = 5
+    assert len(jobs) <= 2 * rounds + 2, len(jobs)
 
 
 def test_repetition_metrics_fold_and_explode(spark):

@@ -549,6 +549,36 @@ def test_pagerank_iteration_exchange_count_measured(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc0)
 
 
+def test_neardup_round_is_one_exchange_no_join(spark):
+    """The cluster.py module docstring's per-round claim, measured on
+    the production `_propagate` plan over a checkpointed state with AQE
+    on (the engine default): a label-propagation round is exactly ONE
+    hash exchange (the node-keyed min) and no join — messages and the
+    carried neighbour lists meet in the same groupBy."""
+    from fstd2pandas_spark.operators.llm.cluster import (
+        _build, _propagate)
+
+    pairs = spark.createDataFrame(
+        [(i % 37, (i * 7) % 41) for i in range(500)],
+        "doc_a long, doc_b long")
+    aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        state = _build(pairs, "doc_a", "doc_b").localCheckpoint()
+        nxt = _propagate(state)
+        nxt.collect()
+        plan = _plan(nxt)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe0)
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    shuffles = [ln for ln in final.splitlines()
+                if "Exchange" in ln and "ReusedExchange" not in ln]
+    assert len(shuffles) == 1, shuffles
+    assert "Exchange hashpartitioning(node" in shuffles[0]
+    assert "Join" not in final
+
+
 def test_reservoir_samplers_two_phase_plan_shape(spark):
     """Plan lock for the _salted_topk scaffold: each reservoir sampler
     is exactly TWO hash exchanges (the (stratum, salt) partial window,
