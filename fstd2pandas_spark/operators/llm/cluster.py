@@ -21,7 +21,9 @@ Spark shape (Pregel-style, one shuffle per round):
 - **Convergence.** The changed-label count is an observation on the
   round's eager checkpoint, so it costs no job of its own: a round is
   the checkpoint's jobs only (two under AQE, the map stage and the
-  result stage).
+  result stage). Labels still changing after ``max_iter`` rounds raise
+  :class:`ConvergenceError`: an unconverged label is a silently wrong
+  dedup.
 
 The checkpoint machinery — the per-round lineage cut, superseded-
 snapshot release so k rounds never pin k state snapshots, the in-plan
@@ -33,12 +35,8 @@ PageRank so a hardening fix can never miss one of the two loops.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_log = logging.getLogger(__name__)
 
 from fstd2pandas_spark.operators.iterative import (
     checkpoint_observed, make_checkpointer, release_checkpoint,
@@ -101,7 +99,9 @@ def neardup_components(pairs: DataFrame, id_a: str = "doc_a",
     """(node, component) for every node in ``pairs``; component = min
     node id reachable through the pair graph. ``max_iter`` (>= 1)
     bounds the rounds (diameter guard); iteration stops early at the
-    first round that changes no label.
+    first round that changes no label, and raises
+    :class:`ConvergenceError` if labels are still changing after
+    ``max_iter`` rounds, never returning a partial merge.
 
     ``require_convergence_within=N`` raises :class:`ConvergenceError` if
     labels are still changing after N rounds — used by callers whose
@@ -151,25 +151,14 @@ def neardup_components(pairs: DataFrame, id_a: str = "doc_a",
                     "graph's diameter exceeds the caller's pinned unroll")
         else:
             # the for-loop exhausted max_iter while labels were STILL
-            # changing — a guard set at >= max_iter must fail loudly
-            # too, not hand back unconverged labels
-            if require_convergence_within is not None:
-                raise ConvergenceError(
-                    f"label propagation did not converge within "
-                    f"max_iter={max_iter} rounds (convergence guard "
-                    f"{require_convergence_within} requested)")
-            # no guard: the documented max_iter bound applies, but the
-            # labels are UNCONVERGED — two members of one duplicate
-            # cluster may carry different canonical ids. Say so: a
-            # silent partial merge reads exactly like a converged one
-            _log.warning(
-                "neardup_components: labels still changing after "
-                "max_iter=%d rounds — returning PARTIALLY merged "
-                "components (a chain-shaped pair graph deeper than "
-                "max_iter); raise max_iter or pass "
-                "require_convergence_within to fail loudly instead",
-                max_iter)
-            converged = True  # keep the returned snapshot un-released
+            # changing: two members of one duplicate cluster may carry
+            # different canonical ids, and a partial merge reads exactly
+            # like a converged one, so never hand it back
+            raise ConvergenceError(
+                f"label propagation still changing after max_iter="
+                f"{max_iter} rounds (a chain-shaped pair graph deeper "
+                "than max_iter); raise max_iter, or pass "
+                "require_convergence_within to pin the round budget")
     finally:
         # the raise paths must not leak storage either: on failure the
         # last snapshot is unreachable to the caller — a retried call
@@ -188,7 +177,8 @@ def canonical_docs(pairs: DataFrame, docs: DataFrame,
                    id_col: str = "doc_id", id_a: str = "doc_a",
                    id_b: str = "doc_b") -> DataFrame:
     """Dedup policy applied: every doc keeps its cluster's canonical
-    (min) id; docs in no pair are their own canonical."""
+    (min) id; docs in no pair are their own canonical. Raises
+    :class:`ConvergenceError` where :func:`neardup_components` does."""
     comp = neardup_components(pairs, id_a, id_b)
     return (
         docs.hint("merge").join(comp, docs[id_col] == comp.node, "left")

@@ -949,7 +949,8 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
        simhash paths (resident memory O(cell population), pairs
        filtered by the exact cosine before leaving codegen);
     3. duplicate groups via :func:`neardup_components` min-label
-       propagation (bounded rounds, checkpointed).
+       propagation (bounded rounds, checkpointed; a pair graph still
+       changing at its ``max_iter`` raises ``ConvergenceError``).
     Per-cell cost is (corpus/n_cells)^2 — n_cells is the knob that
     trades recall for cost, exactly as in the paper.
     """

@@ -10,6 +10,17 @@ Every Python process Spark starts (planner runners, the worker daemon
 and its workers, non-daemon workers) then runs that hook at interpreter
 start, which stops pyspark re-reading its own zip archive at the start
 of every task and planner call on CPython < 3.12.
+
+:func:`get_spark` also sizes Spark's cache of compiled generated classes
+(``spark.sql.codegen.cache.maxEntries``, a static conf). The cache is an
+LRU keyed on the generated source, and Spark's default holds 100
+classes. A pass that cycles through more distinct classes than the cap,
+in the same order each time, misses on every lookup and Janino-compiles
+every class again on every repeat: one ``llm_dedup`` benchmark pass
+needs 144. At :data:`CODEGEN_CACHE_ENTRIES` a repeat of any of the
+measured consumers reuses every class whose source does not change from
+run to run (README, "Generated code"). ``extra_conf`` can still
+override it.
 """
 
 from __future__ import annotations
@@ -19,6 +30,11 @@ import os
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+# Largest measured working set of generated classes with headroom: the
+# 50 oracle gates at sf0.001 compile 2,574 distinct classes, one
+# llm_dedup pass 144 (README, "Generated code")
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def per_spark_context(build):
@@ -85,6 +101,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
     )
     if extra_conf:
         for k, v in extra_conf.items():

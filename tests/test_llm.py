@@ -715,7 +715,7 @@ def test_neardup_convergence_guard(spark):
     """require_convergence_within pins the round budget: a graph whose
     diameter needs more rounds raises ConvergenceError loudly (the gated
     oracle unrolls a fixed number of rounds), while a shallow graph
-    passes under the same bound."""
+    passes under the same bound. Exhausting max_iter raises as well."""
     from fstd2pandas_spark.operators.llm.cluster import (
         ConvergenceError, neardup_components)
 
@@ -731,50 +731,37 @@ def test_neardup_convergence_guard(spark):
                clique, require_convergence_within=2).collect()}
     assert got == {n: 0 for n in range(4)}
 
-    # without the guard, exhausting max_iter mid-change must WARN —
-    # a silent partial merge reads exactly like a converged one —
-    # and still return the documented bounded-round labels
-    import logging
-
-    logger = logging.getLogger(
-        "fstd2pandas_spark.operators.llm.cluster")
-    records = []
-
-    class _Cap(logging.Handler):
-        def emit(self, r):
-            records.append(r.getMessage())
-
-    h = _Cap()
-    logger.addHandler(h)
-    try:
-        part = {r.node: r.component
-                for r in neardup_components(chain,
-                                            max_iter=2).collect()}
-    finally:
-        logger.removeHandler(h)
-    assert any("PARTIALLY merged" in m for m in records)
-    assert len(part) == 13 and part[0] == 0
-    assert len(set(part.values())) > 1  # genuinely unconverged
+    # without the guard, exhausting max_iter mid-change must RAISE too:
+    # a partial merge reads exactly like a converged one, so the
+    # 13-node chain (diameter 12) never comes back half-labelled
+    with pytest.raises(ConvergenceError, match="max_iter=2"):
+        neardup_components(chain, max_iter=2).collect()
 
 
 def test_neardup_releases_superseded_checkpoints(spark):
     """Each propagation round must release the previous label
     snapshot's storage (the shared operators/iterative.py machinery —
     the pagerank storage test's twin): a long chain needing many
-    rounds must not pin one label snapshot per round."""
-    from fstd2pandas_spark.operators.llm.cluster import neardup_components
+    rounds must not pin one label snapshot per round, and a call that
+    raises ConvergenceError must pin none."""
+    from fstd2pandas_spark.operators.llm.cluster import (
+        ConvergenceError, neardup_components)
 
     sc = spark.sparkContext
     before = sc._jsc.sc().getPersistentRDDs().size()
     chain = spark.createDataFrame([(a, a + 1) for a in range(24)],
                                   "doc_a int, doc_b int")
-    # a 25-chain needs well over 5 min-label rounds to converge
-    neardup_components(chain).collect()
+    # a 25-chain takes 25 min-label rounds to converge (24 changing
+    # plus the quiet one), past the default max_iter of 20
+    neardup_components(chain, max_iter=30).collect()
     after = sc._jsc.sc().getPersistentRDDs().size()
     # only the final labels snapshot may remain pinned (edges and every
     # superseded label frame are released); allow one slot of slack for
     # lazy GC of unrelated state
     assert after - before <= 2, (before, after)
+    with pytest.raises(ConvergenceError):
+        neardup_components(chain)
+    assert sc._jsc.sc().getPersistentRDDs().size() <= after
 
 
 def test_neardup_reliable_checkpoint_same_components(spark, tmp_path):
